@@ -939,6 +939,29 @@ object DedupOps {
     lastContainmentCaches.getAndSet(Nil).foreach(_.unpersist(blocking = false))
   }
 
+  /** Materialize `df` once: a lazy local checkpoint filled by a count
+    * job over its RDD, so one job yields both the checkpoint and the row
+    * count (an eager checkpoint followed by `count()` runs three). */
+  private def materializeCounted(df: DataFrame): (DataFrame, Long) = {
+    val cp = df.localCheckpoint(eager = false)
+    (cp, cp.queryExecution.toRdd.count())
+  }
+
+  /** Release the storage blocks behind a DataFrame's localCheckpoint
+    * leaves. Each star round checkpoints its working edge set
+    * (MEMORY_AND_DISK, heap-deserialized); without explicit retirement
+    * the superseded rounds' blocks survive until the driver GCs the RDD
+    * objects — O(log n) rounds of edge data, measured as a Java-heap
+    * OOM on the SECOND back-to-back 100x run in one 6 GiB JVM. An
+    * iterative operator must leave the session's storage the way it
+    * found it. */
+  private def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.analyzed.foreach {
+      case l: org.apache.spark.sql.execution.LogicalRDD =>
+        l.rdd.unpersist(blocking = false): Unit
+      case _ =>
+    }
+
   /** Connected components over an undirected pair graph via alternating
     * LARGE-STAR / SMALL-STAR rounds (the MapReduce CC formulation of
     * Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -960,29 +983,24 @@ object DedupOps {
     *     to m — flattens chains into stars.
     *
     * Fixpoint = a (large, small) round leaves the edge set unchanged;
-    * the final edges are exactly (node → component-min) stars. Every
-    * round ends in an EAGER `localCheckpoint()` so the next round's
-    * plan references a materialized RDD leaf — without it the logical
-    * plan doubles per round (a 1.9 GB plan string was observed under
-    * the old propagation loop). Returns (doc_id, label) for ALL docs;
-    * singletons label themselves. `pairs` must be materialized
-    * (checkpointed/cached) by the caller. */
-  /** Release the storage blocks behind a DataFrame's localCheckpoint
-    * leaves. Each star round checkpoints its working edge set
-    * (MEMORY_AND_DISK, heap-deserialized); without explicit retirement
-    * the superseded rounds' blocks survive until the driver GCs the RDD
-    * objects — ~3 checkpoints x O(log n) rounds of edge data, measured
-    * as a Java-heap OOM on the SECOND back-to-back 100x run in one
-    * 6 GiB JVM. An iterative operator must leave the session's storage
-    * the way it found it. */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false): Unit
-      case _ =>
-    }
-
-  /** `releaseInput = true` means this function CONSUMES `pairs`: once
+    * the final edges are exactly (node → component-min) stars.
+    *
+    * One materialization per round: large-star stays lazy inside
+    * small-star's plan, and only the round's output edge set is
+    * materialized, by a lazy `localCheckpoint` whose count job both
+    * fills the checkpoint and yields the count the convergence gate
+    * compares. The checkpoint keeps the next round's plan on an RDD
+    * leaf — without it the logical plan doubles per round (a 1.9 GB
+    * plan string was observed under the old propagation loop). Each
+    * round is co-partitioned on `u`: both stars take their per-node
+    * minimum as a window partitioned on `u`, so the symmetrized edges
+    * are shuffled on `u` once for large-star, and large-star's output
+    * once on `u` for its distinct and all of small-star. The gate stays
+    * exact: equal counts, then set equality by `except`. Returns
+    * (doc_id, label) for ALL docs; singletons label themselves. `pairs`
+    * is read once, by the first materialization.
+    *
+    * `releaseInput = true` means this function CONSUMES `pairs`: once
     * the initial edge set is materialized, any localCheckpoint blocks
     * behind `pairs` are unpersisted (they would otherwise be dead
     * weight for the whole star loop). Callers that opt in must not
@@ -993,46 +1011,44 @@ object DedupOps {
     // NO initial distinct: the LSH pair lists every dedup caller feeds
     // in are already distinct by construction, and the star rounds
     // dedupe their own output every round regardless (duplicate input
-    // edges only inflate round-1 join volume; the round-1 groupBy(min)
-    // REDUCES, so its aggregate map is bounded by node count, not row
-    // count). A 60M-pair distinct here was the last
+    // edges only inflate round 1's shuffle and its per-node window
+    // buffers, which spill). A 60M-pair distinct here was the last
     // aggregate-state-per-task floor of the 100x/6 GiB/32-wide run —
     // callers with genuinely duplicated pair streams dedupe themselves
     // (see GraphOps' event-bucket caller).
-    var edges = pairs
+    var (edges, prevCnt) = materializeCounted(pairs
       .select(greatest(col("doc_a"), col("doc_b")).as("u"),
         least(col("doc_a"), col("doc_b")).as("v"))
-      .filter(col("u") =!= col("v")).localCheckpoint()
-    var prevCnt = edges.count()
+      .filter(col("u") =!= col("v")))
     // the input pair list fed only the initial edge set — if the caller
     // handed over ownership, its checkpoint blocks die here
     if (releaseInput) releaseCheckpoint(pairs)
     var converged = prevCnt == 0L
     var rounds = 0
+    // both stars take a per-node minimum over u's neighbors: a window
+    // partitioned on u, so each star reads one exchange on u and no
+    // self-join re-reads its input
+    val byU = org.apache.spark.sql.expressions.Window.partitionBy(col("u"))
     while (!converged && rounds < 25) {
-      // LARGE-STAR over the symmetrized edges: one groupBy shuffle for
-      // the per-node minimum, one join to re-attach larger neighbors
-      val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
-      val bigMin = sym.groupBy(col("u")).agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      val large = sym.join(bigMin, "u").filter(col("v") > col("u"))
+      // LARGE-STAR over the symmetrized edges: m = min({u} ∪ Γ(u)), and
+      // every larger neighbor v re-attaches as (v, m). Its output is
+      // shuffled on the new u once, for the distinct and small-star.
+      val large = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
+        .withColumn("m", least(col("u"), min(col("v")).over(byU)))
+        .filter(col("v") > col("u"))
         .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v")).distinct().localCheckpoint()
-      // SMALL-STAR on the larger→smaller edges large-star guarantees
-      val smallMin = large.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val small = large.join(smallMin, "u")
-        .select(col("v").as("x"), col("m"))
-        .union(smallMin.select(col("u").as("x"), col("m")))
-        .filter(col("x") =!= col("m"))
-        .select(col("x").as("u"), col("m").as("v"))
-        .distinct().localCheckpoint()
-      val cnt = small.count()
+        .filter(col("u") =!= col("v")).repartition(col("u")).distinct()
+      // SMALL-STAR on the larger→smaller edges large-star guarantees:
+      // m = min(Γ(u)), and u and each of its neighbors attach to m
+      val (small, cnt) = materializeCounted(large
+        .withColumn("m", min(col("v")).over(byU))
+        .select(explode(array(col("v"), col("u"))).as("u"), col("m").as("v"))
+        .filter(col("u") =!= col("v"))
+        .distinct())
       // cheap count gate first; exact set equality only when counts match
       converged = cnt == prevCnt && small.except(edges).isEmpty
-      // this round's intermediates and the superseded edge set are done
-      // (the except above was the last reader of the old edges) —
-      // release their checkpoint blocks before the next round allocates
-      releaseCheckpoint(large)
+      // the except above was the last reader of the superseded edge set
+      // — release its checkpoint blocks before the next round allocates
       releaseCheckpoint(edges)
       prevCnt = cnt
       edges = small

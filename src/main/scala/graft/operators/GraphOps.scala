@@ -371,8 +371,11 @@ object GraphOps {
     * components as the full clique — the standard trick that keeps a hot
     * bucket from emitting its quadratic pair set). Components resolve via
     * the shared large-star/small-star CC ([[DedupOps.propagateMinLabels]]),
-    * so the edge set contracts geometrically per round. Oracle: DuckDB
-    * recursive-CTE transitive closure over the identical edge list. */
+    * so the edge set contracts geometrically per round, and each round
+    * materializes once: its output edge set, by one checkpointing count
+    * job. The pair list itself is not materialized: the kernel's first
+    * checkpoint reads it once. Oracle: DuckDB recursive-CTE transitive
+    * closure over the identical edge list. */
   private val connectedComponents: Q = (s, dir) => {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("k"), col("hr")).orderBy(col("user_id"))
@@ -389,13 +392,12 @@ object GraphOps {
     val pairs = buckets.withColumn("prev", lag(col("user_id"), 1).over(w))
       .filter(col("prev").isNotNull)
       .select(col("prev").as("doc_a"), col("user_id").as("doc_b"))
-      .localCheckpoint()
     val users = load(s, dir, "events").select(col("user_id").as("doc_id")).distinct()
     // propagateMinLabels no longer pre-dedupes its input (the dedup
     // callers feed distinct pairs by construction); this caller's
     // lag-derived pairs repeat per (key, hour) bucket, so dedupe here —
     // the volume is bucket-bounded, far below the LSH pair scale
-    DedupOps.propagateMinLabels(pairs.distinct(), users, releaseInput = true)
+    DedupOps.propagateMinLabels(pairs.distinct(), users)
       .groupBy(col("label").as("component_rep"))
       .agg(count(lit(1)).as("n_users"), max(col("doc_id")).as("max_user"))
       .orderBy(col("component_rep"))

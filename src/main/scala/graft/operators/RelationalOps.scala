@@ -1933,14 +1933,18 @@ object RelationalOps {
     * of the Hunter-2004 minorization-maximization update
     * s_i ← W_i / Σ_j n_ij/(s_i+s_j), sum-normalized each round.
     * Distribution contract: the duel extraction is one window over
-    * (user, day) partitions + one pair-count shuffle; every MM round
-    * then runs on the k²-bounded pair table (item vocabulary, not data)
-    * — broadcast joins against the k-row score table, nothing
-    * driver-side at all. Every aggregate (denominator, raw score,
-    * normalizer) is FLOAT-quantized so summation order cannot split the
-    * engines; the DuckDB oracle unrolls the same 3 rounds. */
+    * (user, day) partitions + one pair-count shuffle. The resulting
+    * (win, lose, n) table is bounded by the item vocabulary, not the
+    * data: at most k(k-1) rows for k event types. It is collected ONCE
+    * (at most [[BtMaxWinPairs]] rows, checked: a larger table fails the
+    * query, see [[bradleyTerryMM]]) and the MM rounds run on the driver
+    * in O(k²) each, so construction costs the duel pipeline's jobs and
+    * nothing per round. Every aggregate (denominator, raw score,
+    * normalizer) is FLOAT-quantized and summed in item order, so
+    * summation order cannot split the engines; the DuckDB oracle
+    * unrolls the same 3 rounds. Rounding and ordering stay Spark
+    * expressions over the local result. */
   private val evPrefBradleyTerry: Q = (s, dir) => {
-    val fq = (c: org.apache.spark.sql.Column) => c.cast("float").cast("double")
     val byDay = load(s, dir, "events")
       .groupBy(col("user_id"), to_date(col("ts")).as("d"), col("event_type"))
       .agg(count(lit(1)).as("cnt"))
@@ -1958,50 +1962,63 @@ object RelationalOps {
       .agg(max(when(col("rn") === 1, col("event_type"))).as("win"),
         max(when(col("rn") === 2, col("event_type"))).as("lose"))
       .filter(col("lose").isNotNull)
-    // Everything below the duel extraction is k²-BOUNDED (k = event-type
-    // vocabulary), so the MM tables are a handful of rows at ANY corpus
-    // scale — yet they inherited the session's shuffle width: profiled at
-    // sf0.1/32 cores, the 3 MM rounds ran ~40 stages of 32 tasks over
-    // 15-30-row tables (~1000 task launches of scheduling, no compute).
-    // coalesce(1) pins the bounded tables to SinglePartition, which
-    // satisfies every required distribution (guide §2.4: remove
-    // exchanges outright), so each MM round plans ZERO exchanges and
-    // every stage is one task. Scale-safe BY THE QUERY'S OWN CONTRACT:
-    // the bounded grain is the item vocabulary, not the data.
-    val wins = duels.groupBy(col("win"), col("lose"))
-      .agg(count(lit(1)).as("n")).coalesce(1).cache()
-    val pairs = wins.select(col("win").as("i"), col("lose").as("j"), col("n"))
-      .union(wins.select(col("lose").as("i"), col("win").as("j"), col("n")))
-      .coalesce(1)
-      .groupBy(col("i"), col("j")).agg(sum(col("n")).cast("double").as("nij"))
-      .cache()
-    val wt = wins.groupBy(col("win").as("i"))
-      .agg(sum(col("n")).as("n_wins"))
-      .withColumn("w", col("n_wins").cast("double"))
-    val games = pairs.groupBy(col("i")).agg(sum(col("nij")).cast("long").as("n_games"))
-    var sc = pairs.select(col("i").as("item")).distinct()
-      .withColumn("s", lit(1.0))
-    for (_ <- 1 to 3) {
-      val denom = pairs
-        .join(broadcast(sc.select(col("item").as("i"), col("s").as("si"))), "i")
-        .join(broadcast(sc.select(col("item").as("j"), col("s").as("sj"))), "j")
-        .groupBy(col("i"))
-        .agg(fq(sum(col("nij") / (col("si") + col("sj")))).as("den"))
-      val raw = wt.join(denom, "i")
-        .select(col("i"), fq(col("w") / col("den")).as("sraw"))
-      val tot = raw.agg(fq(sum(col("sraw"))).as("tot"))
-      // the score table is referenced TWICE per round (s_i and s_j), so
-      // lineage doubles per iteration — truncate it eagerly (k rows;
-      // same pattern as dedup_cluster_groups' per-round checkpoint)
-      sc = raw.crossJoin(broadcast(tot))
-        .select(col("i").as("item"), fq(col("sraw") / col("tot")).as("s"))
-        .localCheckpoint()
-    }
-    sc.join(wt.select(col("i").as("item"), col("n_wins")), "item")
-      .join(games.select(col("i").as("item"), col("n_games")), "item")
-      .select(col("item"), col("n_wins"), col("n_games"),
-        round(col("s"), 6).as("score"))
+    // one over-limit fetch: the bound check and the table in one job
+    val wins = duels.groupBy(col("win"), col("lose")).agg(count(lit(1)).as("n"))
+      .orderBy(col("win"), col("lose")).limit(BtMaxWinPairs + 1).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
+    val rows = bradleyTerryMM(wins, rounds = 3).map { case (item, nWins, nGames, sc) =>
+      org.apache.spark.sql.Row(item, nWins, nGames, sc) }
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "item STRING, n_wins BIGINT, n_games BIGINT, s DOUBLE")
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      .select(col("item"), col("n_wins"), col("n_games"), round(col("s"), 6).as("score"))
       .orderBy(col("item"))
+  }
+
+  /** Item bound of the driver-side Bradley-Terry loop: k event types
+    * give at most k(k-1) (win, lose) rows. */
+  private[graft] val BtMaxItems = 100
+  private[graft] val BtMaxWinPairs = BtMaxItems * (BtMaxItems - 1)
+
+  /** The MM rounds of [[evPrefBradleyTerry]] over its collected
+    * (win, lose, n) table; returns (item, n_wins, n_games, s) sorted by
+    * item. Mirrors the oracle's relational plan exactly:
+    *   - n_ij sums n over both directions; n_games_i = Σ_j n_ij;
+    *   - round 0 scores every item that played, s = 1;
+    *   - a round keeps only pairs whose two items both hold a score,
+    *     and scores only items with at least one win (the oracle's
+    *     inner joins), so a winless item drops out after round 1;
+    *   - den, raw score and normalizer are each rounded to FLOAT, and
+    *     every sum runs in item order.
+    * Rejects a table over [[BtMaxWinPairs]] rows, naming k. */
+  private[graft] def bradleyTerryMM(wins: Seq[(String, String, Long)], rounds: Int)
+      : Seq[(String, Long, Long, Double)] = {
+    if (wins.length > BtMaxWinPairs) {
+      val k = wins.iterator.flatMap(w => Iterator(w._1, w._2)).toSet.size
+      throw new IllegalStateException(
+        s"ev_pref_bradley_terry: the wins table exceeds $BtMaxWinPairs (win, lose) rows, " +
+          s"so the item vocabulary k (at least $k items) is over the driver-side MM bound " +
+          s"k <= $BtMaxItems")
+    }
+    def fq(x: Double): Double = x.toFloat.toDouble
+    val nij = (wins.map(w => (w._1, w._2) -> w._3) ++ wins.map(w => (w._2, w._1) -> w._3))
+      .groupMapReduce(_._1)(_._2)(_ + _)
+    val opponents: Map[String, Seq[(String, Double)]] = nij.toSeq
+      .groupMap(_._1._1) { case ((_, j), n) => (j, n.toDouble) }
+      .map { case (i, js) => i -> js.sortBy(_._1) }
+    val nWins = wins.groupMapReduce(_._1)(_._3)(_ + _)
+    val nGames = nij.groupMapReduce(_._1._1)(_._2)(_ + _)
+    val items = opponents.keys.toSeq.sorted
+    var sc: Map[String, Double] = items.map(_ -> 1.0).toMap
+    for (_ <- 1 to rounds) {
+      val raw = items.filter(i => sc.contains(i) && nWins.contains(i)).flatMap { i =>
+        val terms = opponents(i).collect { case (j, n) if sc.contains(j) => n / (sc(i) + sc(j)) }
+        if (terms.isEmpty) None else Some(i -> fq(nWins(i).toDouble / fq(terms.sum)))
+      }
+      val tot = fq(raw.map(_._2).sum)
+      sc = raw.map { case (i, r) => i -> fq(r / tot) }.toMap
+    }
+    items.filter(sc.contains).map(i => (i, nWins(i), nGames(i), sc(i)))
   }
 
   private def btRoundSql(k: Int): String =

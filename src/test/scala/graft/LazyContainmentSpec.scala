@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** r12 verdict item 7: constructing the containment query must run NO
@@ -14,32 +11,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class LazyContainmentSpec extends AnyFunSuite {
   private lazy val spark = GraftSparkSession.spark
 
-  private val lastJobStages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-
-  private def countJobs[A](body: => A): (A, Int) = {
-    val jobs = new AtomicInteger(0)
-    lastJobStages.clear()
-    val listener = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        lastJobStages.add(jobStart.stageInfos.map(_.name).mkString(" ~ ").take(200))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val r = body
-      // the listener bus is async (and its drain API is private) —
-      // poll until the counter is stable for two consecutive reads
-      var prev = -1
-      var cur = jobs.get()
-      var spins = 0
-      while (cur != prev && spins < 40) {
-        Thread.sleep(100); prev = cur; cur = jobs.get(); spins += 1
-      }
-      (r, cur)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("construction + explain of dedup_containment runs zero jobs") {
     spark.catalog.clearCache()
     // warm Tables' per-JVM schema memo: the FIRST load of a table pays
@@ -47,7 +18,7 @@ class LazyContainmentSpec extends AnyFunSuite {
     // execution); after the memo, loads are job-free — which is what
     // makes a zero-jobs construction achievable at all
     Tables.load(spark, GraftSparkSession.sfDir, "documents").schema
-    val (df, jobsDuringBuild) = countJobs {
+    val (df, jobsDuringBuild) = JobCounter(spark) {
       val q = operators.DedupOps.queries("dedup_containment")
       val df = q(spark, GraftSparkSession.sfDir)
       // a formatted explain plans the query (incl. physical planning)
@@ -56,15 +27,15 @@ class LazyContainmentSpec extends AnyFunSuite {
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       df
     }
-    assert(jobsDuringBuild == 0,
-      s"containment construction/explain submitted $jobsDuringBuild jobs " +
-        s"(${lastJobStages.toArray.mkString("; ")}); must be lazy")
+    assert(jobsDuringBuild.isEmpty,
+      s"containment construction/explain submitted ${jobsDuringBuild.size} jobs " +
+        s"(${jobsDuringBuild.mkString("; ")}); must be lazy")
 
     // first action executes the pipeline — and produces the same
     // survivors the oracle checks (non-empty at sf0.001)
-    val (n, jobsDuringAction) = countJobs { df.count() }
+    val (n, jobsDuringAction) = JobCounter(spark) { df.count() }
     assert(n > 0)
-    assert(jobsDuringAction > 0)
+    assert(jobsDuringAction.nonEmpty)
     operators.DedupOps.releaseCaches()
   }
 
@@ -109,13 +80,13 @@ class LazyContainmentSpec extends AnyFunSuite {
     spark.catalog.clearCache()
     val q = operators.DedupOps.queries("dedup_containment")
     val df = q(spark, GraftSparkSession.sfDir)
-    val (_, jobsFirst) = countJobs { df.count() }
+    val (_, jobsFirst) = JobCounter(spark) { df.count() }
     // the survivors cache is populated now; a re-action on the same
     // DataFrame must not re-run the verify pipeline (dramatically
     // fewer jobs — the sort + scan of cached batches only)
-    val (_, jobsSecond) = countJobs { df.count() }
-    assert(jobsSecond < jobsFirst,
-      s"second action ran $jobsSecond jobs vs first $jobsFirst — cache not reused")
+    val (_, jobsSecond) = JobCounter(spark) { df.count() }
+    assert(jobsSecond.size < jobsFirst.size,
+      s"second action ran ${jobsSecond.size} jobs vs first ${jobsFirst.size} — cache not reused")
     operators.DedupOps.releaseCaches()
   }
 }

@@ -119,19 +119,6 @@ class QueryLibrarySpec extends AnyFunSuite {
     assert(plan.contains("TakeOrderedAndProject"), plan.take(2000))
   }
 
-  test("bradley_terry pins its k²-bounded MM tables to one partition (r16)") {
-    // the duel/pair/score tables are bounded by the event-type
-    // vocabulary (k²), not the corpus — Coalesce(1) pins them to
-    // SinglePartition so every MM round plans ZERO exchanges and
-    // one-task stages (profiled at sf0.1/32c: 59 → 37 stages,
-    // ~1300 → ~40 task launches). This test pins the coalesce nodes
-    // so a refactor cannot silently re-widen the bounded loop.
-    val df = SparkEntry.queries("ev_pref_bradley_terry")(spark, dir)
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("Coalesce 1"), plan.take(2000))
-  }
-
   test("whole-stage codegen covers the custom cosine expression") {
     val df = SparkEntry.queries("sim_ann_brute_topk")(spark, dir)
     df.collect() // materialize so AQE collapses stages into codegen spans

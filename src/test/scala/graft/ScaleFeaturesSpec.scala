@@ -123,15 +123,24 @@ class ScaleFeaturesSpec extends AnyFunSuite {
 
   test("label propagation keeps a constant-size plan across rounds") {
     import spark.implicits._
-    // a 16-node path graph forces ~15 propagation rounds — without
-    // per-round lineage truncation the logical plan doubles each round
-    // (2^15 nodes; a 1.9 GB plan string was observed in practice) and
-    // this assertion could not hold
+    // a 16-node path graph takes 5 star rounds — without per-round
+    // lineage truncation the logical plan doubles each round (a 1.9 GB
+    // plan string was observed in practice) and this assertion could
+    // not hold
     val n = 16
     val pairs = (0 until n - 1).map(i => (i.toLong, i + 1L))
       .toDF("doc_a", "doc_b").localCheckpoint()
     val docs = (0 until n).map(_.toLong).toDF("doc_id")
-    val labels = operators.DedupOps.propagateMinLabels(pairs, docs)
+    val (labels, jobs) = JobCounter(spark) {
+      operators.DedupOps.propagateMinLabels(pairs, docs)
+    }
+    // one materialization per round, pinned: the first checkpoint's
+    // count is 1 job; each star round runs 4 (the symmetrized-edge,
+    // large-star and small-star exchanges, then the count that fills
+    // the round's checkpoint) plus 2 for the except gate, which runs
+    // every round here because a path's edge count never changes.
+    // Labeling the docs afterwards is lazy.
+    assert(jobs.size == 1 + 5 * (4 + 2), jobs.mkString("\n"))
     val planLen = labels.queryExecution.optimizedPlan.toString.length
     assert(planLen < 10000, s"plan string grew to $planLen chars — lineage not truncated")
     val out = labels.collect()
