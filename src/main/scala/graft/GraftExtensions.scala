@@ -16,6 +16,13 @@ import org.apache.spark.sql.types.DateType
   * expression-rewrite layer (e.g. EliminateRedundantGetTimestamp,
   * gluten-substrait rewrite rules — SURVEY.md §4).
   *
+  * Optimizer rules: [[EliminateRedundantToDate]], and
+  * [[graft.functions.CompiledLambdas]], which compiles Spark's array
+  * `transform`/`filter`/`exists`/`forall`/`aggregate` into generated
+  * loops with lambda-invariant work evaluated once per row. `zip_with`,
+  * `array_sort` comparators and lambdas whose body holds an interpreted
+  * expression stay Spark's interpreted functions.
+  *
   * Activate with `spark.sql.extensions=graft.GraftExtensions` or
   * through [[GraftSession.builder]].
   */
@@ -108,6 +115,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         exprs(0), exprs(1), GraftExtensions.literalK("top_k_by_score", exprs(2)))
         .toAggregateExpression()))
     ext.injectOptimizerRule(_ => EliminateRedundantToDate)
+    ext.injectOptimizerRule(_ => graft.functions.CompiledLambdas)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     ext.injectPlannerStrategy(_ => graft.plans.DeferredMaterializeStrategy)
     ext.injectQueryStagePrepRule(graft.plans.MergeTwoPhaseAggregate.apply)

@@ -3,15 +3,22 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.execution.{DataSourceScanExec, FileSourceScanExec, QueryExecution, SparkPlan,
+  WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanExecBase
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, Exchange}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Plan-health reporter — the GlutenFallbackReporter / gluten-ui analog
   * (SURVEY.md §4 "Fallback reporting/UI"): where the reference explains
   * which nodes fell back to vanilla Spark, we summarize each executed
   * query's physical plan (shuffle/broadcast counts, codegen coverage,
-  * scan pushdown presence) so regressions in plan shape are observable
-  * without reading full explains.
+  * scan pushdown presence) and name the expressions that still run
+  * interpreted, so regressions in plan shape are observable without
+  * reading full explains.
   */
 object PlanHealth {
 
@@ -23,33 +30,55 @@ object PlanHealth {
       codegenSpans: Int,
       scans: Int,
       scansWithPushedFilters: Int,
+      /** distinct interpreted (`CodegenFallback`) expression classes */
+      interpreted: Seq[String],
       failed: Boolean)
+
+  /** Every node of a physical plan: through AQE's adaptive wrapper (its
+    * current plan — the initial one before execution, the final one
+    * after) and query stages, and into subquery plans. */
+  def nodes(plan: SparkPlan): Seq[SparkPlan] = plan match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case s: QueryStageExec => s +: nodes(s.plan)
+    case p => p +: (p.children ++ p.subqueries).flatMap(nodes)
+  }
+
+  /** Every interpreted (`CodegenFallback`) expression in a physical
+    * plan, once per occurrence. */
+  def interpreted(plan: SparkPlan): Seq[Expression] =
+    nodes(plan).flatMap(_.expressions.flatMap(_.collect { case f: CodegenFallback => f }))
+
+  /** the classes of [[interpreted]] */
+  def codegenFallbacks(plan: SparkPlan): Seq[String] =
+    interpreted(plan).map(_.getClass.getSimpleName.stripSuffix("$"))
+
+  private def summarize(name: String, plan: SparkPlan, durationNs: Long,
+      failed: Boolean): Record = {
+    val ns = nodes(plan)
+    Record(name, durationNs,
+      exchanges = ns.count(_.isInstanceOf[Exchange]),
+      broadcasts = ns.count(_.isInstanceOf[BroadcastExchangeLike]),
+      codegenSpans = ns.count(_.isInstanceOf[WholeStageCodegenExec]),
+      scans = ns.count(p => p.isInstanceOf[DataSourceScanExec] ||
+        p.isInstanceOf[DataSourceV2ScanExecBase]),
+      scansWithPushedFilters = ns.count {
+        case s: FileSourceScanExec => s.dataFilters.nonEmpty
+        case _ => false
+      },
+      interpreted = codegenFallbacks(plan).distinct.sorted,
+      failed = failed)
+  }
 
   final class Listener extends QueryExecutionListener {
     val records = new mutable.ArrayBuffer[Record]()
 
-    private def summarize(name: String, qe: QueryExecution, durationNs: Long,
-        failed: Boolean): Record = {
-      val plan = qe.executedPlan.toString
-      def count(token: String): Int = {
-        var n = 0; var i = plan.indexOf(token)
-        while (i >= 0) { n += 1; i = plan.indexOf(token, i + 1) }
-        n
-      }
-      Record(name, durationNs,
-        exchanges = count("Exchange "),
-        broadcasts = count("BroadcastExchange"),
-        codegenSpans = count("WholeStageCodegen") max count("*("),
-        scans = count("FileScan") + count("Scan parquet"),
-        scansWithPushedFilters = count("PushedFilters: [") - count("PushedFilters: []"),
-        failed = failed)
-    }
-
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-      records.synchronized { records += summarize(funcName, qe, durationNs, failed = false) }
+      records.synchronized {
+        records += summarize(funcName, qe.executedPlan, durationNs, failed = false)
+      }
 
     override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
-      records.synchronized { records += summarize(funcName, qe, 0L, failed = true) }
+      records.synchronized { records += summarize(funcName, qe.executedPlan, 0L, failed = true) }
   }
 
   /** attach a fresh listener to the session and return it */
@@ -70,20 +99,10 @@ object PlanHealth {
     * what it DID — the pair a fleet dashboard ingests per query. */
   final case class OpMetric(node: String, metric: String, value: Long, accumId: Long = -1L)
 
-  def runtimeMetrics(qe: QueryExecution): Seq[OpMetric] = {
-    // walk through AQE wrappers to the final executed tree
-    def walk(p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] =
-      p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          walk(a.executedPlan)
-        case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          s +: walk(s.plan)
-        case other => other +: other.children.flatMap(walk)
-      }
-    walk(qe.executedPlan).flatMap { p =>
+  def runtimeMetrics(qe: QueryExecution): Seq[OpMetric] =
+    nodes(qe.executedPlan).flatMap { p =>
       p.metrics.toSeq.map { case (k, m) => OpMetric(p.nodeName, k, m.value, m.id) }
     }
-  }
 
   /** Aggregated headline numbers from [[runtimeMetrics]]. Reused
     * exchanges / reused query stages share the ORIGINAL node's
@@ -108,6 +127,7 @@ object PlanHealth {
     l.records.map { r =>
       f"${r.name}%-12s ${r.durationNs / 1e6}%9.1f ms exch=${r.exchanges} bcast=${r.broadcasts} " +
         f"codegen=${r.codegenSpans} scans=${r.scans} pushed=${r.scansWithPushedFilters}" +
+        (if (r.interpreted.isEmpty) "" else s" interpreted=${r.interpreted.mkString(",")}") +
         (if (r.failed) " FAILED" else "")
     }.toSeq
   }

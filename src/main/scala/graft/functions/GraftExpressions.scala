@@ -701,7 +701,7 @@ object GraftExpressions {
     * `words[i] .. words[i+k-1]`; max(0, n-k+1) shingles. The composed
     * formulation `transform(sequence(1, n-k+1), i -> concat_ws(' ',
     * element_at(w, i), ...))` is CodegenFallback (a boxed interpreted
-    * lambda per shingle — the wave-9 FallbackScan's top corpus-wall
+    * lambda per shingle — the wave-9 fallback survey's top corpus-wall
     * hit, `dedup_minhash_shingle`); this native expression generates a
     * primitive loop over the array. Output strings are byte-identical:
     * UTF8String.concatWs with a single-space separator over exactly k

@@ -668,7 +668,7 @@ object DedupOps {
     // every document) — the native WordShingles expression generates a
     // primitive loop; the previous transform∘concat_ws∘element_at
     // composition was CodegenFallback (a boxed interpreted lambda per
-    // shingle; wave-9 FallbackScan's top corpus-wall hit). Byte-
+    // shingle; the wave-9 fallback survey's top corpus-wall hit). Byte-
     // identical output pinned in GraftExpressionsSpec.
     val sets = toks.select(col("doc_id"),
       sort_array(array_distinct(

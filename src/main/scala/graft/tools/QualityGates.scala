@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 
 /** Quantitative gates for the rows-only queries (the ones the DuckDB
@@ -19,24 +20,6 @@ object QualityGates {
   final case class Gate(query: String, metric: String, value: Double,
       bound: Double, pass: Boolean)
 
-  /** Every CodegenFallback expression class in a physical plan,
-    * including subquery plans (shared by the FallbackScan tool and the
-    * FallbackGateSpec regression gate). */
-  def codegenFallbacks(plan: org.apache.spark.sql.execution.SparkPlan): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    plan.foreach { node =>
-      node.expressions.foreach { root =>
-        root.foreach {
-          case f: org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback =>
-            out += f.getClass.getSimpleName.stripSuffix("$")
-          case _ =>
-        }
-      }
-      node.subqueries.foreach(sq => out ++= codegenFallbacks(sq))
-    }
-    out.toSeq
-  }
-
   /** CodegenFallback classes ALLOWED in oracled-query plans, each with
     * the reason it stays interpreted. FallbackGateSpec scans every
     * query and FAILS on any class not listed — the wave-9 lesson is
@@ -49,9 +32,14 @@ object QualityGates {
     *  - TypedImperativeAggregate / object aggregates: evaluated once
     *    per GROUP through the object-agg path, not per element — no
     *    per-row interpreted loop to convert (CollectList…TopKFreq).
-    *  - Documented no-win HOFs: per-row lambdas measured at or below
-    *    native rewrites on their actual data shapes (short arrays /
-    *    cold paths; the bigram-LM rewrite was REVERTED as slower, r9).
+    *  - Lambdas that `graft.functions.CompiledLambdas` leaves
+    *    interpreted: `ZipWith` (two-array lambdas are outside the
+    *    compiled set; its uses loop over ≤ 64 dims, in
+    *    sim_standardize_dims and sim_ann_pq's codebook distance),
+    *    `ArraySort` (comparator lambdas; array_sort over a group's
+    *    collect_list, once per group), and their `LambdaFunction` /
+    *    `NamedLambdaVariable` machinery. The five functions the rule
+    *    compiles are NOT listed: see [[fallbackAllowed]].
     *  - graft's own CodegenFallback expressions: bounded driver-fed
     *    state where codegen bought nothing measurable (MinHashSignature
     *    runs once per distinct set row; RefHash is a spec oracle).
@@ -64,14 +52,20 @@ object QualityGates {
     "ListAgg", "BitmapOrAgg", "PivotFirst",
     "ApproxTopK", "ApproxTopKAccumulate", "ApproxTopKEstimate",
     "TopKFreq", "TopKByScore",
-    // documented no-win / cold-path HOF machinery
-    "NamedLambdaVariable", "LambdaFunction", "ArrayTransform",
-    "ArrayAggregate", "ArrayFilter", "ArraySort", "ArrayForAll",
-    "ArrayExists", "ZipWith",
+    // lambdas left interpreted, and their machinery
+    "ZipWith", "ArraySort", "LambdaFunction", "NamedLambdaVariable",
     // parser-bound (schema inference path, one row in fn_json)
     "JsonToStructs",
     // graft expressions with bounded or once-per-set evaluation
     "MinHashSignature", "RefHash")
+
+  /** Whether an interpreted expression may appear in an oracled-query
+    * plan: its class is allowlisted, or it is one of the functions
+    * `CompiledLambdas` compiles, left interpreted because a lambda body
+    * holds an interpreted expression (gated in its own right). */
+  def fallbackAllowed(e: Expression): Boolean =
+    fallbackAllowlist(e.getClass.getSimpleName.stripSuffix("$")) ||
+      graft.functions.CompiledLambdas.heldBack(e)
 
   private def topSets(df: DataFrame, k: Int): Map[Long, Set[Long]] =
     df.filter(col("rnk") <= k).select(col("qid"), col("cid")).collect()

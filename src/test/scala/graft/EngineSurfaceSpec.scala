@@ -48,6 +48,24 @@ class EngineSurfaceSpec extends AnyFunSuite {
     } finally PlanHealth.detach(spark, l)
   }
 
+  test("plan health names the interpreted expressions: none for a compiled transform") {
+    def interpreted(): Seq[String] = {
+      val l = PlanHealth.attach(spark)
+      try {
+        Tables.load(spark, dir, "orders")
+          .select(transform(array(col("o_totalprice")), x => x * 2).as("t")).collect()
+        var tries = 0
+        while (l.records.isEmpty && tries < 50) { Thread.sleep(100); tries += 1 }
+        l.records.last.interpreted
+      } finally PlanHealth.detach(spark, l)
+    }
+    assert(interpreted().isEmpty)
+    // Spark's own lambdas, with the rule excluded
+    spark.conf.set("spark.sql.optimizer.excludedRules", "graft.functions.CompiledLambdas")
+    try assert(interpreted().contains("ArrayTransform"))
+    finally spark.conf.unset("spark.sql.optimizer.excludedRules")
+  }
+
   test("runtime SQLMetrics surface actual rows and shuffle volume per operator") {
     val df = Tables.load(spark, dir, "orders")
       .groupBy(col("o_orderstatus")).agg(count(lit(1)).as("n"))
