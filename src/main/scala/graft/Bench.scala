@@ -1,13 +1,17 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.{JsonNodeFactory, ObjectNode}
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs the headline queries against
   * SPARK_GRAFT_SF_DIR, forcing full plan execution through the noop
   * datasource sink (a bare .count() would let Catalyst prune the
-  * per-row work we mean to measure). Prints ONE JSON line.
+  * per-row work we mean to measure). It measures and reports; whether a
+  * change is a gain is judged by the repo benchmark's paired
+  * parent/change runs (`benchmark/run.py`), not here.
   *
-  * Two passes measure the BASELINE.md bar ("within 2x of vanilla
+  * Two engines measure the BASELINE.md bar ("within 2x of vanilla
   * Spark") directly instead of by construction:
   *   1. graft  — [[GraftSession.builder]]: extensions (custom
   *      expressions, optimizer/physical rules, as-of strategy) plus the
@@ -17,62 +21,32 @@ import org.apache.spark.sql.SparkSession
   *      the plans a stock Spark user would get.
   * Queries that need a graft-only operator (the custom as-of join
   * strategy) or the graft catalog cannot run on vanilla and are listed
-  * in `vanilla_skipped`. The JSON also carries
+  * in `vanilla_skipped`. The full artifact also carries
   * `plan_changed_by_rules` (queries whose normalized graft plan
   * differs from the normalized VANILLA plan) and `plan_delta_causes`
   * (per query, WHICH tuned conf or injected rule causes the delta,
   * found by bisecting each tuned conf to the vanilla session's actual
-  * value) — so a graft-vs-vanilla time delta is attributable, never
-  * hand-waved as noise.
+  * value) — so a graft-vs-vanilla time delta is attributable.
   *
   * Fairness protocol (per-query interleave): BOTH engines live as two
-  * sessions over ONE SparkContext (extensions and every tuned SQL conf
-  * are session-scoped), and each query is timed on graft and vanilla
-  * back-to-back, for SPARK_GRAFT_BENCH_ROUNDS rounds (default 2) with
-  * the within-pair order flipped each round; the per-query minimum
-  * across rounds is reported for each engine. The earlier whole-pass
-  * A-B-A-B protocol left minutes between an engine's two measurements
-  * of the same query — JIT/GC/page-cache drift over that gap showed
-  * IDENTICAL-PLAN queries ±50% apart between engines, swamping any
-  * real rule effect. Adjacent-in-time pairs + min-of-rounds cut that
-  * to noise level. Static confs (the cache serializer) are shared by
-  * both sessions — a conservative bias: vanilla gets the engine's
-  * cache encoding too, so it can only understate graft's advantage.
+  * sessions over ONE SparkContext, and each query is timed on graft and
+  * vanilla back-to-back, for SPARK_GRAFT_BENCH_ROUNDS rounds (default 2)
+  * with the within-pair order flipped each round; the per-query minimum
+  * across rounds is reported for each engine. Adjacent-in-time pairs
+  * keep JIT/GC/page-cache drift out of the twin ratio. Static confs
+  * (the cache serializer) are shared — vanilla gets the engine's cache
+  * encoding too, so it can only understate graft's advantage.
   *
-  * Mover auto-ledger (round 14): after the interleaved rounds, any
-  * comparable whose ratio lands >= 1.2 either way, whose spread exceeds
-  * 30%, or whose graft wall drifted > 15% from the PRIOR round's
-  * artifact (SPARK_GRAFT_BENCH_PRIOR, default BENCH_COMPACT.json;
-  * prior walls are session-scale-normalized first, see
-  * [[sessionScale]] — drift measures movement relative to this
-  * session's temperature, published as `prior_session_scale`) is
-  * re-run SOLO for 3 adjacent pairs and the attribution — trigger,
-  * before/after walls, four-way verdict (noise / faster / slower /
-  * no_twin, see [[moverVerdict]]) — is published as `mover_ledger` in
-  * BENCH_FULL.json (split counts in the compact line), so no round can
-  * ship an unattributed mover and the actionable class (slower, with
-  * twin) is machine-findable.
-  *
-  * Fresh-JVM confirmation (round 15): even the SOLO re-runs share the
-  * battery's hot JVM — and three rounds in a row the published
-  * "slower" reading was overturned by hand-run fresh-JVM sessions
-  * (r13 q36 1.29→0.91, r14 containment 1.27→0.80/0.96, r15-sf1
-  * containment 1.29→1.02/0.95: each time the in-battery vanilla twin
-  * drew a warm-session minimum graft didn't). So any solo verdict of
-  * "slower" is now re-measured in a CHILD JVM (same heap/add-opens/
-  * classpath, SET=only:that-query, 3 interleaved pairs, ledger
-  * disabled — no recursion), and [[moverVerdict]] is recomputed on the
-  * child's minimums: the published verdict. The row records both
-  * stages (`solo_ratio` + `fresh_*`, `fresh_check`:
-  * confirmed/overturned/failed); at most 3 child JVMs per run
-  * (~2.5 min each), SPARK_GRAFT_BENCH_FRESH_SOLO=0 opts out,
-  * SPARK_GRAFT_BENCH_LEDGER=0 disables the whole ledger stage (set in
-  * the child).
+  * Output: ONE JSON line on stdout ([[stdoutLine]]; the queries it
+  * omits depend on the set alone, never on walls, see [[stdoutKept]]),
+  * the full artifact ([[fullArtifact]], SPARK_GRAFT_BENCH_OUT) and its
+  * compact twin.
   *
   * Env knobs: SPARK_GRAFT_BENCH_SET=tpch restricts to the 22 TPC-H
   * queries (used for the sf1 scale run where only TPC-H tables are
   * generated); SPARK_GRAFT_BENCH_VANILLA=0 skips the vanilla passes;
-  * SPARK_GRAFT_BENCH_ROUNDS=1 reverts to single-shot timing.
+  * SPARK_GRAFT_BENCH_ROUNDS=1 reverts to single-shot timing;
+  * SPARK_GRAFT_BENCH_TELEMETRY=1 adds an untimed metrics pass.
   */
 object Bench {
   val tpch: Seq[String] = Seq(
@@ -243,187 +217,150 @@ object Bench {
     }
   }
 
-  /** Per-query graft walls from the PRIOR round's compact artifact —
-    * the drift baseline for the mover auto-ledger. Read from
-    * SPARK_GRAFT_BENCH_PRIOR (default: the repo's BENCH_COMPACT.json,
-    * which the previous round's headline run left in the working
-    * directory). Used only when the artifact's sf matches this run's —
-    * cross-SF walls are not comparable. Any parse problem degrades to
-    * "no prior" (the ledger then runs on ratio/spread triggers only). */
-  private def priorWalls(sfDir: String, setName: String): Map[String, Double] =
-    try {
-      val f = new java.io.File(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_PRIOR", "BENCH_COMPACT.json"))
-      if (!f.exists()) Map.empty
-      else {
-        val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
-        val sfOk = node.get("sf") != null && node.get("sf").asText() == sfDir
-        // the prior must come from the SAME bench set: a corpus-sweep
-        // wall is not comparable to a headline wall of the same query
-        // (different warmup neighborhood and set ordering) — round 14's
-        // corpus run drift-flagged half the battery against the r13
-        // HEADLINE artifact before this guard. An artifact WITHOUT the
-        // set field (pre-r14 compact) is accepted only when this run IS
-        // the default "full" set — the only set pre-r14 headline
-        // artifacts were produced by; accepting it for any set would
-        // re-open the exact cross-set comparison the guard prevents
-        // (advisor r14)
-        val setOk =
-          if (node.get("set") == null) setName == "full"
-          else node.get("set").asText() == setName
-        val qs = node.get("queries")
-        if (!sfOk || !setOk || qs == null) Map.empty
-        else {
-          val b = Map.newBuilder[String, Double]
-          val it = qs.fields()
-          while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asDouble() }
-          b.result()
-        }
-      }
-    } catch { case _: Throwable => Map.empty }
+  /** Byte budget of the stdout line: its reader keeps only the last
+    * ~2000 bytes of stdout, and sbt's trailing "[success] Total time…"
+    * line spends ~80 of them. */
+  val stdoutBudget = 1850
 
-  /** Four-way mover verdict (judge r14 — the binary noise/reproduces
-    * enum conflated 17 improvement rows and 2 graft-only drift rows
-    * with the 2 actionable slow movers). Computed on the SOLO minimums
-    * only:
-    *   - "slower"  — solo ratio >= 1.2 (graft slower than its vanilla
-    *     twin), or, at twin-parity ratio, the solo wall reproduces a
-    *     >15% drift UP vs the prior artifact. The one actionable class.
-    *   - "faster"  — solo ratio <= 1/1.2, or solo wall drifted >15%
-    *     DOWN vs prior (an improvement, not a regression).
-    *   - "no_twin" — no vanilla twin (graft-only query or vanilla
-    *     failed) and the solo wall reproduces a >15% drift either way;
-    *     there is no ratio to anchor a slower/faster call.
-    *   - "noise"   — no trigger-class condition holds on the solo
-    *     minimums: the main-round reading was session noise.
-    * `soloDrift` is SIGNED: (soloWall - priorWall) / priorWall. */
-  def moverVerdict(hasTwin: Boolean, soloRatio: Double,
-      soloDrift: Option[Double]): String =
-    if (hasTwin && soloRatio >= 1.2) "slower"
-    else if (hasTwin && soloRatio > 0 && soloRatio <= (1 / 1.2)) "faster"
-    else if (soloDrift.exists(d => math.abs(d) > 0.15))
-      if (!hasTwin) "no_twin"
-      else if (soloDrift.exists(_ > 0)) "slower"
-      else "faster"
-    else "noise"
+  /** The widest a wall prints on the stdout line (2 dp). The line is
+    * sized as if every wall printed this wide, so any run whose walls
+    * stay under 10 000 s fits the budget. */
+  val widestWall = 9999.99
 
-  /** Session-temperature factor for the drift baseline (round 15): the
-    * median of (current wall / prior wall) over matched queries. Two
-    * same-protocol corpus sweeps an hour apart measured the same
-    * battery at 198 vs 245 s with the vanilla column in proportion —
-    * ±25% session swings are normal on this box, and a raw drift
-    * trigger against a cooler prior calls the temperature "slower"
-    * (64 of 374 rows in the hot session). Scaling every prior wall by
-    * the median makes drift measure movement RELATIVE to the session;
-    * the median is robust to the few genuine movers it exists to
-    * expose. Guards: needs >= 8 matched queries, and a median outside
-    * (0.5, 2.0) means the artifacts are not comparable at all (wrong
-    * prior) — both degrade to 1.0 (unscaled). */
-  def sessionScale(prior: Map[String, Double], mins: Map[String, Double]): Double = {
-    val rs = prior.toSeq.flatMap { case (n, p) =>
-      mins.get(n).filter(_ => p > 0).map(_ / p)
-    }.sorted
-    if (rs.size >= 8 && rs(rs.size / 2) > 0.5 && rs(rs.size / 2) < 2.0)
-      rs(rs.size / 2)
-    else 1.0
+  /** One run's walls in seconds. `names` is the set in its own order;
+    * `graft` holds the queries graft ran, `vanilla` those the stock
+    * session ran (None when the vanilla pass is off). */
+  case class Run(set: String, sf: String, names: Seq[String],
+      graft: Map[String, Double], vanilla: Option[Map[String, Double]],
+      vanillaSkipped: Seq[String], graftFailed: Seq[String]) {
+    // the ratio's numerator AND denominator require BOTH engines to have
+    // succeeded on a query
+    val comparable: Seq[String] =
+      names.filter(n => graft.contains(n) && vanilla.exists(_.contains(n)))
+    def figures: Figures = {
+      val vTotal = vanilla.fold(0.0)(v => comparable.map(v).sum)
+      Figures(names.flatMap(graft.get).sum, vTotal,
+        if (vTotal > 0) comparable.map(graft).sum / vTotal else 0.0,
+        comparable.size, vanillaSkipped.size, graftFailed.size)
+    }
   }
 
-  /** Verdict recomputed on a fresh child JVM's minimums — the same
-    * four-way taxonomy over cleaner numbers (no shared session state).
-    * Returns (verdict, ratio): the verdict is the PUBLISHED one for a
-    * row whose in-battery solo said "slower". */
-  def freshOutcome(freshGraft: Double, freshVanilla: Double,
-      priorWall: Option[Double]): (String, Double) = {
-    val hasTwin = freshVanilla > 0
-    val ratio = if (hasTwin) freshGraft / freshVanilla else 0.0
-    val drift = priorWall.filter(_ > 0).map(p => (freshGraft - p) / p)
-    (moverVerdict(hasTwin, ratio, drift), ratio)
+  /** The scalar figures of the compact object. */
+  case class Figures(total: Double, vanillaTotal: Double, ratio: Double,
+      comparableN: Int, vanillaSkippedN: Int, graftFailedN: Int)
+
+  // exact decimals: the default node factory strips trailing zeros
+  // (0.70 -> 0.7, 100.00 -> 1E+2)
+  private val json = new ObjectMapper()
+    .setNodeFactory(JsonNodeFactory.withExactBigDecimals(true))
+
+  private def dp(v: Double, scale: Int): java.math.BigDecimal =
+    java.math.BigDecimal.valueOf(v).setScale(scale, java.math.RoundingMode.HALF_UP)
+
+  private def walls(o: ObjectNode, field: String, ws: Seq[(String, Double)], scale: Int): Unit =
+    { val w = o.putObject(field); ws.foreach { case (n, v) => w.put(n, dp(v, scale)) } }
+
+  private def list(o: ObjectNode, field: String, names: Seq[String]): Unit =
+    { val a = o.putArray(field); names.foreach(n => a.add(n)) }
+
+  /** The compact object: the contract fields a stdout reader parses, with
+    * the walls of `queries` only (2 dp unless `scale` says otherwise). */
+  private def compact(set: String, sf: String, queries: Seq[(String, Double)],
+      omittedN: Int, f: Figures, withVanilla: Boolean, scale: Int = 2): ObjectNode = {
+    val o = json.createObjectNode()
+    o.put("metric", "total").put("value", dp(f.total, scale)).put("unit", "sec")
+    walls(o, "queries", queries, scale)
+    o.put("queries_omitted", omittedN)
+    if (withVanilla)
+      o.put("vanilla_total", dp(f.vanillaTotal, 3))
+        .put("graft_vs_vanilla_ratio", dp(f.ratio, 3))
+        .put("comparable_n", f.comparableN).put("vanilla_skipped_n", f.vanillaSkippedN)
+    o.put("graft_failed_n", f.graftFailedN)
+    o.put("set", set).put("detail", "BENCH_FULL.json").put("sf", sf)
   }
 
-  /** Run SET=only:<name> in a CHILD JVM (same -Xmx/add-opens/classpath
-    * as this one; ledger + fresh-solo disabled in the child) and return
-    * its (graft, vanilla) minimums — vanilla 0.0 when the child skipped
-    * it. None on spawn failure, nonzero exit, timeout (10 min, child
-    * killed), or missing fields: the caller then keeps the in-battery
-    * verdict and marks the check failed, never blocks the artifact. */
-  private def freshJvmCheck(name: String, sfDir: String): Option[(Double, Double)] =
-    try {
-      import scala.jdk.CollectionConverters._
-      val out = java.io.File.createTempFile(s"bench_fresh_$name-", ".json")
-      out.delete()
-      val javaBin = new java.io.File(
-        new java.io.File(System.getProperty("java.home"), "bin"), "java").getAbsolutePath
-      // replicate this JVM's own flags (heap, JDK-17 add-opens) minus
-      // debug agents that cannot bind their port twice
-      val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-        .getInputArguments.asScala.toSeq.filterNot(a =>
-          a.startsWith("-agentlib") || a.startsWith("-javaagent") ||
-            a.startsWith("-Xrunjdwp") || a.startsWith("-Xdebug"))
-      val cmd = Seq(javaBin) ++ jvmArgs ++
-        Seq("-cp", System.getProperty("java.class.path"), "graft.Bench")
-      val pb = new ProcessBuilder(cmd.asJava)
-      val env = pb.environment()
-      env.put("SPARK_GRAFT_BENCH_SET", s"only:$name")
-      env.put("SPARK_GRAFT_BENCH_ROUNDS", "3")
-      env.put("SPARK_GRAFT_BENCH_OUT", out.getAbsolutePath)
-      env.put("SPARK_GRAFT_SF_DIR", sfDir)
-      env.put("SPARK_GRAFT_BENCH_LEDGER", "0") // no grandchild ledgers/JVMs
-      pb.redirectErrorStream(true)
-      pb.redirectOutput(new java.io.File(
-        System.getProperty("java.io.tmpdir"), s"bench_fresh_$name.log"))
-      val p = pb.start()
-      val done = p.waitFor(10, java.util.concurrent.TimeUnit.MINUTES)
-      if (!done) { p.destroyForcibly(); None }
-      else if (p.exitValue() != 0) None
-      else {
-        val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(out)
-        out.delete()
-        // the child also writes its compact twin next to the full artifact
-        new java.io.File(out.getPath.replace(".json", "_COMPACT.json")).delete()
-        def field(obj: String): Option[Double] =
-          Option(node.get(obj)).flatMap(q => Option(q.get(name))).map(_.asDouble())
-        field("queries").map(g => (g, field("vanilla").getOrElse(0.0)))
+  private def compact(r: Run, shown: Seq[String], omittedN: Int, scale: Int): ObjectNode =
+    compact(r.set, r.sf, shown.filter(r.graft.contains).map(n => n -> r.graft(n)),
+      omittedN, r.figures, r.vanilla.nonEmpty, scale)
+
+  /** The names the stdout line shows: the longest prefix of the set's
+    * own order whose line fits [[stdoutBudget]] with every figure at
+    * its widest. It reads only the names and the line's own set and sf
+    * labels (no wall, no file), so two runs of one set at one SF show
+    * and omit the same names; the rest are dropped from the set's end. */
+  def stdoutKept(set: String, sf: String, names: Seq[String]): Seq[String] = {
+    val n = names.size
+    val widest = Figures(widestWall * n, widestWall * n, 999.999, n, n, n)
+    def fits(k: Int): Boolean =
+      json.writeValueAsBytes(compact(set, sf, names.take(k).map(_ -> widestWall),
+        n - k, widest, withVanilla = true)).length <= stdoutBudget
+    names.take((n to 0 by -1).find(fits).getOrElse(0))
+  }
+
+  /** The one stdout line: the compact object over the `kept` names. */
+  def stdoutLine(r: Run, kept: Seq[String]): String =
+    json.writeValueAsString(compact(r, kept, r.names.size - kept.size, scale = 2))
+
+  /** The compact twin of the full artifact: every wall, no budget. */
+  def compactArtifact(r: Run): String =
+    json.writeValueAsString(compact(r, r.names, 0, scale = 2))
+
+  /** The full artifact: the compact fields at 3 dp plus the vanilla
+    * walls, the skipped, failed and stdout-omitted names, the plan audit
+    * and the telemetry. */
+  def fullArtifact(r: Run, kept: Seq[String], deltas: Seq[(String, Seq[String])],
+      telem: Seq[(String, Map[String, Long])]): String = {
+    val o = compact(r, r.names, r.names.size - kept.size, scale = 3)
+    o.remove("detail")
+    r.vanilla.foreach { v =>
+      walls(o, "vanilla", r.comparable.map(n => n -> v(n)), 3)
+      list(o, "vanilla_skipped", r.vanillaSkipped)
+    }
+    list(o, "graft_failed", r.graftFailed)
+    list(o, "stdout_omitted", r.names.filterNot(kept.toSet))
+    // queries with ANY plan delta vs vanilla, and per query its causes
+    list(o, "plan_changed_by_rules", deltas.map(_._1))
+    val causes = o.putObject("plan_delta_causes")
+    deltas.foreach { case (n, cs) => list(causes, n, cs) }
+    if (telem.nonEmpty) {
+      val t = o.putObject("telemetry")
+      telem.foreach { case (n, m) =>
+        t.putObject(n).put("output_rows", m("output_rows"))
+          .put("shuffle_records", m("shuffle_records_written"))
+          .put("shuffle_mb", dp(m("shuffle_bytes_written") / 1e6, 2))
+          .put("spill_mb", dp(m("spill_bytes") / 1e6, 2))
       }
-    } catch { case _: Throwable => None }
-
-  private def toJson(pairs: Seq[(String, Double)]): String =
-    pairs.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
-
-  /** 2-decimal variant for the stdout line (the driver captures only a
-    * bounded stdout tail; every byte of the compact line counts). */
-  private def toJson2(pairs: Seq[(String, Double)]): String =
-    pairs.map { case (k, v) => "\"" + k + "\":" + f"$v%.2f" }.mkString("{", ",", "}")
+    }
+    json.writeValueAsString(o)
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val set = sys.env.getOrElse("SPARK_GRAFT_BENCH_SET", "full") match {
+    val setName = sys.env.getOrElse("SPARK_GRAFT_BENCH_SET", "full")
+    val set = setName match {
       case "tpch" => tpch
       case "pipeline" => pipeline
-      // the ENTIRE oracled corpus (every SparkEntry query, incl. the
-      // TPC-DS and ClickBench adaptation packs) — the per-query
-      // graft-vs-vanilla parity sweep; queries that cannot plan or run
-      // on a stock session are detected at run time and reported in
-      // vanilla_skipped alongside the static graftOnly set
+      // every oracled query: the per-query graft-vs-vanilla parity
+      // sweep; queries a stock session cannot run land in vanilla_skipped
       case "corpus" => SparkEntry.queries.keys.toSeq.sorted
       case s if s.startsWith("only:") => // local iteration aid
         s.stripPrefix("only:").split(",").toSeq.filter(_.nonEmpty)
       case _ => headline
     }
-    val withVanilla = sys.env.getOrElse("SPARK_GRAFT_BENCH_VANILLA", "1") != "0" &&
-      !sys.env.get("SPARK_GRAFT_BENCH_ENGINE").contains("vanilla")
+    // SPARK_GRAFT_BENCH_ENGINE=vanilla: time the STOCK session only — the
+    // vanilla column for scale protocols where two sessions in one JVM
+    // exceed the memory one engine fits in. No interleaved vanilla pass.
+    val engineVanilla = sys.env.get("SPARK_GRAFT_BENCH_ENGINE").contains("vanilla")
+    val withVanilla = !engineVanilla && sys.env.getOrElse("SPARK_GRAFT_BENCH_VANILLA", "1") != "0"
     val rounds = sys.env.getOrElse("SPARK_GRAFT_BENCH_ROUNDS", "2").toInt
 
-    def freshSession(): Unit = {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-    }
+    def freshSession(): Unit =
+      { SparkSession.clearActiveSession(); SparkSession.clearDefaultSession() }
 
-    // One SparkContext, two sessions. The context itself carries only
-    // the neutral/static confs (NOT spark.sql.extensions — that static
-    // conf would leak the graft extensions into the vanilla session);
-    // graft's extensions are injected programmatically per-session and
-    // its tuned SQL confs are all session-scoped.
+    // One SparkContext, two sessions. The vanilla builder creates the
+    // context with only neutral/static confs (NOT spark.sql.extensions,
+    // which would leak the graft extensions into the vanilla session).
     // SPARK_GRAFT_MASTER=local-cluster[n,c,mem] benches across real
     // executor JVMs; both sessions share the one (cluster) context
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
@@ -438,26 +375,12 @@ object Bench {
       .getOrCreate()
     vanilla.sparkContext.setLogLevel("WARN")
     freshSession()
-    // SPARK_GRAFT_BENCH_ENGINE=vanilla: time the queries on the STOCK
-    // session only (no extensions, stock planner confs) — the solo
-    // vanilla column for scale protocols where hosting both sessions in
-    // one JVM exceeds the memory budget a single engine fits in (each
-    // engine then gets its own JVM invocation under the identical
-    // SPARK_DRIVER_MEM). Implies no interleaved vanilla pass.
-    val engineVanilla = sys.env.get("SPARK_GRAFT_BENCH_ENGINE").contains("vanilla")
-    val graft = if (engineVanilla) vanilla else SparkSession.builder()
-      .master(master)
-      .withExtensions(new GraftExtensions()(_))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .getOrCreate()
+    // the context exists, so only the builder's session-scoped tuned
+    // defaults apply; the extensions are injected per session
+    val graft = if (engineVanilla) vanilla
+      else GraftSession.builder(master, cpus.toInt)
+        .withExtensions(new GraftExtensions()(_))
+        .getOrCreate()
     // experiment knob: comma-separated k=v session-conf overrides for the
     // GRAFT session only (time-bisecting a plan-delta cause found by the
     // audit, e.g. SPARK_GRAFT_BENCH_CONF=spark.sql.join.preferSortMergeJoin=true)
@@ -468,14 +391,9 @@ object Bench {
     val names = set.filter(qs.contains)
     var gSamples = Map.empty[String, List[Double]].withDefaultValue(Nil)
     var vSamples = Map.empty[String, List[Double]].withDefaultValue(Nil)
-    // queries observed to fail on the stock session (undefined graft
-    // SQL function, graft-catalog reference…): excluded from the
-    // vanilla column and ratio, reported as skipped — a failed vanilla
-    // run must not enter the denominator as a near-zero time
+    // a failed run's near-zero elapsed time must not enter either column:
+    // failures are dropped and listed (vanilla_skipped / graft_failed)
     val vanillaFailed = scala.collection.mutable.Set[String]()
-    // symmetric exclusion for the graft column: a failed graft run's
-    // near-zero elapsed time must not enter gSamples and flatter the
-    // ratio — failures are dropped and reported in `graft_failed`
     val graftFailed = scala.collection.mutable.Set[String]()
     warmup(graft, sfDir)
     if (withVanilla) warmup(vanilla, sfDir)
@@ -497,166 +415,9 @@ object Bench {
       // residual first-in-pair page-cache effect
       for (name <- names) timePair(name, graftFirst = round % 2 == 1)
     }
-    // Mover auto-ledger + noise hardening (VERDICT r13 task 1: no round
-    // ships an unattributed mover again). Three triggers flag a query:
-    //   spread  — round-to-round spread > 30% on either engine
-    //             (checkpoint/cache-heavy queries are uniquely sensitive
-    //             to neighbor pressure; round-5 published a 1.99x
-    //             artifact for a query that measures 0.94x isolated);
-    //   ratio   — graft/vanilla >= 1.2 either way (the r13 q36 class:
-    //             1.29x shipped unattributed because the old threshold
-    //             was 1.3);
-    //   drift   — the graft wall moved > 15% from the PRIOR round's
-    //             artifact (SPARK_GRAFT_BENCH_PRIOR, default the repo's
-    //             BENCH_COMPACT.json; used only when its sf matches).
-    // Every flagged query gets SOLO adjacent-pair re-runs (3 pairs
-    // back-to-back — min-of-3, not interleaved with other movers), and
-    // the ledger (trigger, before/after walls, four-way verdict — see
-    // moverVerdict) is published in BENCH_FULL.json.
-    def spread(xs: List[Double]): Double =
-      if (xs.size < 2 || xs.min <= 0) 0.0 else xs.max / xs.min - 1.0
-    val setName = sys.env.getOrElse("SPARK_GRAFT_BENCH_SET", "full")
-    val rawPrior: Map[String, Double] = priorWalls(sfDir, setName)
-    // Session-scale normalization (round 15): two same-protocol sessions
-    // an hour apart measured the SAME battery at 198 vs 245 s total with
-    // the vanilla column moving in proportion (ratio 0.995/0.994) — the
-    // machine's session temperature swings ±25%, so a RAW drift trigger
-    // against a cooler prior flags half the battery and calls the
-    // temperature "slower" (64 rows in the hot session). The drift
-    // baseline is therefore the prior wall × the session-median of
-    // (current wall / prior wall) over all matched queries: the median
-    // absorbs the global temperature (it is robust to the few genuine
-    // movers), and drift measures movement RELATIVE to the session.
-    // Published as prior_session_scale so a reader sees the temperature
-    // itself. Needs >= 8 matched queries to trust the median; a scale
-    // further than 2x from 1.0 means the artifacts are not comparable
-    // (wrong prior?) and degrades to unscaled.
-    val priorScale: Double = sessionScale(rawPrior,
-      gSamples.toMap.collect { case (n, xs) if xs.nonEmpty => n -> xs.min })
-    val prior: Map[String, Double] = rawPrior.map { case (n, p) => n -> p * priorScale }
-    var ledger: Seq[(String, String)] = Nil // query -> ledger JSON object
-    // SPARK_GRAFT_BENCH_LEDGER=0: no ledger stage at all — set by the
-    // fresh-JVM child so the confirmation pass cannot recurse
-    val ledgerEnabled = sys.env.getOrElse("SPARK_GRAFT_BENCH_LEDGER", "1") != "0"
-    val freshEnabled = ledgerEnabled &&
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_FRESH_SOLO", "1") != "0"
-    // spawn cap: headline runs rarely have >1 slower row, but a corpus
-    // sweep against a different-session prior can surface several —
-    // SPARK_GRAFT_BENCH_FRESH_MAX raises the budget for sweep protocols
-    val freshMax = sys.env.getOrElse("SPARK_GRAFT_BENCH_FRESH_MAX", "3").toInt
-    var freshSpawned = 0
-    if (rounds > 1 && withVanilla && ledgerEnabled) {
-      def reasons(n: String): Seq[String] = {
-        val gs = gSamples(n); val vs = vSamples(n)
-        if (gs.isEmpty) Nil
-        else {
-          val ratio = if (vs.nonEmpty && vs.min > 0) gs.min / vs.min else 1.0
-          // spread/drift only matter above a wall floor: sub-0.3 s walls
-          // are JIT/page-cache dominated and their spreads are
-          // meaningless (the round-14 corpus sweep flagged 214 of 382
-          // without the floor); the ratio trigger keeps every wall —
-          // a tiny query at 1.3x is still worth one solo attribution
-          val bigEnough = gs.min >= 0.3 || prior.get(n).exists(_ >= 0.3)
-          Seq(
-            if (bigEnough && (spread(gs) > 0.3 || spread(vs) > 0.3)) Some("spread") else None,
-            if (ratio >= 1.2 || ratio <= (1 / 1.2)) Some("ratio") else None,
-            prior.get(n).collect {
-              case p if bigEnough && p > 0 && math.abs(gs.min - p) / p > 0.15 => "drift_vs_prior"
-            }).flatten
-        }
-      }
-      val flagged = names.map(n => n -> reasons(n)).filter(_._2.nonEmpty)
-      // GC fence before the re-measure pass: the flagged queries are by
-      // construction the pressure-sensitive ones (hash builds, checkpoint
-      // materialization), and the extra rounds exist to measure THEM, not
-      // the heap debt their session neighbors left behind
-      if (flagged.nonEmpty) { System.gc(); Thread.sleep(500) }
-      // PASS 1 — solo re-runs for every flagged row (no fresh JVMs yet)
-      case class SoloRow(name: String, why: Seq[String], gBefore: Double,
-        vBefore: Double, gAfter: Double, vAfter: Double, hasTwin: Boolean,
-        ratio: Double, drift: Option[Double], soloVerdict: String)
-      val soloRows = flagged.map { case (name, why) =>
-        val gBefore = gSamples(name).min
-        val vBefore = if (vSamples(name).nonEmpty) vSamples(name).min else 0.0
-        // Solo isolation (advisor r14): the solo verdict must be computed
-        // from ONLY the samples the 3 solo pairs append — taking .min
-        // over the accumulated list would let a noisy main-round minimum
-        // survive into solo_ratio and flip the published verdict, which
-        // is exactly the misattribution this ledger exists to prevent.
-        // Samples are PREPENDED (dt :: list), so the solo ones are the
-        // head; dropRight(main count) isolates them. The PUBLISHED wall
-        // (gTimes below) still takes the global min over all samples.
-        val gMainN = gSamples(name).size
-        val vMainN = vSamples(name).size
-        for (round <- 1 to 3) timePair(name, graftFirst = round % 2 == 1)
-        val gSolo = gSamples(name).dropRight(gMainN)
-        val vSolo = vSamples(name).dropRight(vMainN)
-        val gAfter = if (gSolo.nonEmpty) gSolo.min else gBefore
-        val vAfter = if (vSolo.nonEmpty) vSolo.min else 0.0
-        val hasTwin = vAfter > 0
-        val fRatio = if (hasTwin) gAfter / vAfter else 0.0
-        val fDrift = prior.get(name).filter(_ > 0).map(p => (gAfter - p) / p)
-        SoloRow(name, why, gBefore, vBefore, gAfter, vAfter, hasTwin, fRatio,
-          fDrift, moverVerdict(hasTwin, fRatio, fDrift))
-      }
-      // PASS 2 — fresh-JVM confirmation of the actionable class: a
-      // "slower" solo verdict still shares the battery's hot JVM, and
-      // that exact reading was hand-overturned three rounds running
-      // (q36, containment ×2 — each time the in-battery vanilla drew a
-      // warm-session minimum). Re-measure in a child JVM and publish
-      // the verdict recomputed on ITS minimums; both stages stay in the
-      // row. Cap freshMax spawns (~2.5 min each) — and spend the budget
-      // WORST-FIRST (r16): rows with the highest twin ratio, then the
-      // largest |drift|, get the child JVMs. The r16 baseline run burned
-      // all 3 spawns on drift-only noise rows in battery order while the
-      // one ratio-1.4 row of the round went unchecked.
-      val freshOrder = soloRows.filter(_.soloVerdict == "slower")
-        .sortBy(r => (-(if (r.hasTwin) r.ratio else 0.0),
-          -r.drift.map(math.abs).getOrElse(0.0)))
-        .map(_.name)
-      val freshByName: Map[String, (String, String)] =
-        (if (freshEnabled) freshOrder.take(freshMax) else Nil).flatMap { name =>
-          freshSpawned += 1
-          freshJvmCheck(name, sfDir) match {
-            case Some((fg, fv)) =>
-              val (fVerdict, fr) = freshOutcome(fg, fv, prior.get(name))
-              val check = if (fVerdict == "slower") "confirmed" else "overturned"
-              val frStr = if (fv > 0)
-                f""","fresh_vanilla":$fv%.3f,"fresh_ratio":$fr%.3f""" else ""
-              Some(name -> (fVerdict,
-                f""","fresh_graft":$fg%.3f$frStr,"fresh_check":"$check""""))
-            case None => Some(name -> ("", ""","fresh_check":"failed""""))
-          }
-        }.toMap
-      ledger = soloRows.map { r =>
-        val (verdict, freshStr) = freshByName.get(r.name) match {
-          case Some((fv, str)) => (if (fv.nonEmpty) fv else r.soloVerdict, str)
-          case None => (r.soloVerdict, "")
-        }
-        val priorStr = prior.get(r.name).map(p => f""","prior":$p%.3f""").getOrElse("")
-        val driftStr = r.drift.map(d => f""","solo_drift_vs_prior":$d%.3f""").getOrElse("")
-        // solo_ratio/vanilla_* are omitted when the twin is skipped — a
-        // 0.0 ratio on a graft-only row read as a real mover (judge r14)
-        val twinStr = if (r.hasTwin)
-          f""","vanilla_main":${r.vBefore}%.3f,"vanilla_solo":${r.vAfter}%.3f,"solo_ratio":${r.ratio}%.3f"""
-          else ""
-        r.name -> (f"""{"reasons":${r.why.map("\"" + _ + "\"").mkString("[", ",", "]")}""" +
-          f""","graft_main":${r.gBefore}%.3f$priorStr,"solo_pairs":3""" +
-          f""","graft_solo":${r.gAfter}%.3f$twinStr$driftStr$freshStr,"verdict":"$verdict"}""")
-      }
-    }
-    val gTimes: Map[String, Double] = gSamples.map { case (k, v) => k -> v.min }.toMap
-    val vTimes: Map[String, Double] = vSamples.map { case (k, v) => k -> v.min }.toMap
-    val results: Seq[(String, Double)] = names.filter(gTimes.contains).map(n => n -> gTimes(n))
-    // the comparable set (and hence the ratio's numerator AND
-    // denominator) requires BOTH engines to have succeeded on a query
-    val vanillaResults: Seq[(String, Double)] =
-      names.filter(n => vTimes.contains(n) && gTimes.contains(n)).map(n => n -> vTimes(n))
     // Optional per-query runtime telemetry (SPARK_GRAFT_BENCH_TELEMETRY=1):
-    // one extra untimed execution per query on the graft session, reading
-    // the populated SQLMetrics — the spill/shuffle volumes that prove (or
-    // disprove) memory-pressure behavior at big SFs. Untimed by design:
-    // metrics collection must never perturb the published timings.
+    // one extra UNTIMED execution per query on the graft session, reading
+    // the spill/shuffle volumes from the populated SQLMetrics.
     val telemetry = sys.env.getOrElse("SPARK_GRAFT_BENCH_TELEMETRY", "0") == "1"
     val telem: Seq[(String, Map[String, Long])] = if (telemetry) names.flatMap { n =>
       try {
@@ -671,141 +432,20 @@ object Bench {
       planAudit(graft, if (withVanilla) Some(vanilla) else None, sfDir, set)
     graft.stop(); freshSession()
 
-    val total = results.map(_._2).sum
-    // Compact vs full split: the driver captures only a bounded tail of
-    // stdout, and the round-4 line (graft map + vanilla map + audit
-    // lists, ~4.7 KB) overflowed it — BENCH_r04 recorded `parsed: null`.
-    // The stdout line now carries the contract fields plus scalar
-    // summaries only (~2 KB); the per-query vanilla column and the full
-    // rule-audit list go to BENCH_FULL.json in the working directory.
-    val (vanillaCompact, vanillaFull) = if (withVanilla) {
-      val vTotal = vanillaResults.map(_._2).sum
-      // ratio over the common query set only
-      val common = vanillaResults.map(_._1).toSet
-      val graftCommon = results.filter(r => common(r._1)).map(_._2).sum
-      val ratio = if (vTotal > 0) graftCommon / vTotal else 0.0
-      val skippedNames = set.filter(n => graftOnly.contains(n) || vanillaFailed(n))
-      val skipped = skippedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val gFailed = graftFailed.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-      // vanilla_skipped_n + comparable_n make the ratio's denominator
-      // explicit in the compact line: the ratio covers `comparable_n`
-      // queries; `vanilla_skipped_n` graft-only queries are excluded;
-      // graft_failed lists queries dropped from the GRAFT column
-      // (symmetric to vanilla_skipped — never recorded as near-zero)
-      (f""","vanilla_total":$vTotal%.3f,"graft_vs_vanilla_ratio":$ratio%.3f""" +
-        s""","comparable_n":${vanillaResults.size},"vanilla_skipped_n":${skippedNames.size}""" +
-        s""","graft_failed_n":${graftFailed.size}""",
-        f""","vanilla":${toJson(vanillaResults)},"vanilla_total":$vTotal%.3f""" +
-          f""","graft_vs_vanilla_ratio":$ratio%.3f,"vanilla_skipped":$skipped""" +
-          s""","comparable_n":${vanillaResults.size},"vanilla_skipped_n":${skippedNames.size}""" +
-          s""","graft_failed":$gFailed""")
-    } else if (graftFailed.nonEmpty) {
-      val gFailed = graftFailed.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-      (s""","graft_failed_n":${graftFailed.size}""", s""","graft_failed":$gFailed""")
-    } else ("", "")
-    // back-compat list (queries with ANY plan delta vs vanilla) + the
-    // per-query attribution object
-    val changedJson = deltas.map("\"" + _._1 + "\"").mkString("[", ",", "]")
-    val causesJson = deltas.map { case (n, cs) =>
-      "\"" + n + "\":" + cs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    // The driver records only the last ~2000 bytes of stdout, and sbt's
-    // trailing "[success] Total time…" line spends ~80 of them — the
-    // round-4 compact line (2.0 KB) was still front-truncated and the
-    // round recorded `parsed: null`. Enforce a hard byte budget: 2-dp
-    // per-query times, and if the line would still overflow, drop the
-    // CHEAPEST queries from the stdout map (least informative; the full
-    // 3-dp map and vanilla column always live in BENCH_FULL.json) and
-    // say how many were omitted.
-    val stdoutBudget = 1850
-    // split counts per verdict class (judge r14): movers_slower_n is
-    // the one number a reader needs — the actionable slower-with-twin
-    // class — without eyeballing every ledger row
-    def vCount(v: String) = ledger.count(_._2.contains("\"verdict\":\"" + v + "\""))
-    val moverCompact =
-      if (rounds > 1 && withVanilla)
-        s""","movers_flagged_n":${ledger.size},"movers_slower_n":${vCount("slower")}""" +
-          s""","movers_faster_n":${vCount("faster")}""" +
-          s""","movers_no_twin_n":${vCount("no_twin")},"movers_noise_n":${vCount("noise")}""" +
-          // the session-temperature factor every prior wall was scaled
-          // by before drift was measured (1.0 = no prior / no scaling)
-          f""","prior_session_scale":$priorScale%.3f"""
-      else ""
-    def compactLine(kept: Seq[(String, Double)], omitted: Int): String = {
-      val om = if (omitted > 0) s""","queries_omitted":$omitted""" else ""
-      f"""{"metric":"total","value":$total%.2f,"unit":"sec","queries":${toJson2(kept)}""" +
-        om + vanillaCompact + moverCompact +
-        s""","set":"$setName","detail":"BENCH_FULL.json","sf":"$sfDir"}"""
-    }
-    // Stdout-line membership stability (judge r15 #8): trimming purely
-    // by cheapest-wall made the omitted set shift with session noise
-    // (9 queries that RAN appeared as dropped_from_bench in PERF_r15
-    // because they fell out of the line while others fell in). Trim
-    // preference: first drop queries the PRIOR round's stdout line
-    // already omitted (recorded per run in BENCH_STDOUT_KEPT.json,
-    // same sf/set guard as the drift prior), cheapest first; only then
-    // — if the budget still overflows — drop prior members, cheapest
-    // first. Formatting-only: walls, totals and the full artifacts are
-    // untouched.
-    val priorKept: Set[String] =
-      try {
-        val f = new java.io.File(sys.env.getOrElse(
-          "SPARK_GRAFT_BENCH_STDOUT_PRIOR", "BENCH_STDOUT_KEPT.json"))
-        if (!f.exists()) Set.empty
-        else {
-          val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
-          val ok = node.get("sf") != null && node.get("sf").asText() == sfDir &&
-            node.get("set") != null && node.get("set").asText() == setName
-          if (!ok || node.get("kept") == null) Set.empty
-          else {
-            val b = Set.newBuilder[String]
-            node.get("kept").forEach(n => b += n.asText())
-            b.result()
-          }
-        }
-      } catch { case _: Throwable => Set.empty }
-    var kept = results
-    var line = compactLine(kept, 0)
-    while (line.length > stdoutBudget && kept.size > 1) {
-      val nonPrior = kept.filterNot(r => priorKept(r._1))
-      val cheapest = (if (nonPrior.nonEmpty) nonPrior else kept).minBy(_._2)._1
-      kept = kept.filterNot(_._1 == cheapest)
-      line = compactLine(kept, results.size - kept.size)
-    }
-    // record this run's stdout membership for the next round's trim
-    try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_STDOUT_KEPT.json"),
-      (s"""{"sf":"$sfDir","set":"$setName","kept":[""" +
-        kept.map("\"" + _._1 + "\"").mkString(",") + "]}\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
-    val telemJson =
-      if (telem.isEmpty) ""
-      else telem.map { case (n, m) =>
-        f""""$n":{"output_rows":${m("output_rows")},"shuffle_records":${m(
-            "shuffle_records_written")},"shuffle_mb":${m("shuffle_bytes_written") / 1e6}%.2f,"spill_mb":${m(
-            "spill_bytes") / 1e6}%.2f}"""
-      }.mkString(""","telemetry":{""", ",", "}")
-    val ledgerJson = ledger.map { case (n, obj) => "\"" + n + "\":" + obj }
-      .mkString("{", ",", "}")
-    val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${toJson(results)}""" +
-        vanillaFull + s""","plan_changed_by_rules":$changedJson""" +
-        s""","plan_delta_causes":$causesJson$telemJson""" +
-        s""","mover_ledger":$ledgerJson,"sf":"$sfDir"}"""
+    val run = Run(setName, sfDir, names,
+      gSamples.map { case (k, v) => k -> v.min },
+      if (withVanilla) Some(vSamples.map { case (k, v) => k -> v.min }) else None,
+      names.filter(n => graftOnly.contains(n) || vanillaFailed(n)),
+      graftFailed.toSeq.sorted)
+    val kept = stdoutKept(setName, sfDir, names)
+    def write(path: String, body: String): Unit =
+      java.nio.file.Files.write(java.nio.file.Paths.get(path), (body + "\n").getBytes("UTF-8"))
     // SPARK_GRAFT_BENCH_OUT names the full artifact (default
-    // BENCH_FULL.json); the corpus parity sweep writes its own file so
-    // the headline artifact is never clobbered
-    java.nio.file.Files.write(java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")),
-      (full + "\n").getBytes("UTF-8"))
-    // The driver's stdout-tail parser has recorded `parsed: null` three
-    // rounds running even with the byte budget; the compact object also
-    // goes to a bare standalone file so the round artifact is always
-    // machine-readable without stdout scraping. The UNTRUNCATED compact
-    // (full 2-dp query map, no stdout byte budget) is what lands here.
-    val compactPath = sys.env.get("SPARK_GRAFT_BENCH_OUT")
-      .map(_.replace(".json", "_COMPACT.json")).getOrElse("BENCH_COMPACT.json")
-    java.nio.file.Files.write(java.nio.file.Paths.get(compactPath),
-      (compactLine(results, 0) + "\n").getBytes("UTF-8"))
-    println(line)
+    // BENCH_FULL.json); the compact twin holds every wall (no budget)
+    val out = sys.env.get("SPARK_GRAFT_BENCH_OUT")
+    write(out.getOrElse("BENCH_FULL.json"), fullArtifact(run, kept, deltas, telem))
+    write(out.map(_.replace(".json", "_COMPACT.json")).getOrElse("BENCH_COMPACT.json"),
+      compactArtifact(run))
+    println(stdoutLine(run, kept))
   }
 }

@@ -1,9 +1,16 @@
 package graft
 
 /** Generates CONFIG.md from the GraftConf registry (the GlutenConfig
-  * docs analog). `sbt "runMain graft.ConfigDocs"`. */
+  * docs analog). `sbt "runMain graft.ConfigDocs"`; ConfigDocsSpec
+  * checks the committed file against [[render]]. */
 object ConfigDocs {
   def main(args: Array[String]): Unit = {
+    java.nio.file.Files.writeString(java.nio.file.Paths.get("CONFIG.md"), render())
+    println("[config-docs] wrote CONFIG.md")
+  }
+
+  /** CONFIG.md's full text. */
+  def render(): String = {
     val sb = new StringBuilder
     sb.append("# CONFIG — the spark.graft.* namespace (generated by graft.ConfigDocs)\n\n")
     sb.append("Session-conf-backed engine knobs (GraftConf). Defaults reproduce the\n")
@@ -49,29 +56,8 @@ object ConfigDocs {
       "writes its own file so the headline artifact is never clobbered |\n")
     sb.append("| `SPARK_DRIVER_MEM` | `8g` | forked-run JVM heap (build.sbt) — the 6 GiB " +
       "memory-pressure protocol for the pipeline scaling runs sets `6g` |\n")
-    sb.append("| `SPARK_GRAFT_BENCH_PRIOR` | `BENCH_COMPACT.json` | prior-round compact " +
-      "artifact for the mover auto-ledger's drift trigger; used only when its `sf` AND " +
-      "bench `set` match the current run (a corpus-sweep wall is not comparable to a " +
-      "headline wall of the same query). Prior walls are session-scale-normalized before " +
-      "drift is measured: the median of (current/prior) over matched queries — published " +
-      "as `prior_session_scale` — absorbs the box's ±25% session-temperature swings so " +
-      "drift flags only queries that moved RELATIVE to their session (round 15) |\n")
-    sb.append("| `SPARK_GRAFT_BENCH_FRESH_SOLO` | `1` | fresh-JVM confirmation of " +
-      "\"slower\"-verdict movers (round 15): each such row is re-measured in a child JVM " +
-      "(same heap/classpath, SET=only:that-query, 3 interleaved pairs) and the published " +
-      "verdict is recomputed on the child's minimums — the in-battery solo re-runs share " +
-      "the battery's hot session, which manufactured the overturned slower readings of " +
-      "r13-r15. At most `SPARK_GRAFT_BENCH_FRESH_MAX` (default 3) child JVMs per run; " +
-      "`0` opts out (the in-battery verdict then ships, as before round 15) |\n")
-    sb.append("| `SPARK_GRAFT_BENCH_FRESH_MAX` | `3` | fresh-JVM spawn budget per bench " +
-      "run — headline runs rarely carry more than one slower row, but a corpus sweep " +
-      "against a different-session prior can surface several (the r15 sweep had 9) |\n")
-    sb.append("| `SPARK_GRAFT_BENCH_LEDGER` | `1` | `0` disables the whole mover-ledger " +
-      "stage (triggers, solo re-runs, fresh-JVM confirmation); set by the fresh-JVM child " +
-      "itself so the confirmation pass cannot recurse |\n")
     sb.append(scaleOracleSection)
-    java.nio.file.Files.writeString(java.nio.file.Paths.get("CONFIG.md"), sb.toString)
-    println("[config-docs] wrote CONFIG.md")
+    sb.toString
   }
 
   /** the big-SF oracle protocol (round 14) — part of the generated doc

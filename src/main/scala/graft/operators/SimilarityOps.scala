@@ -269,8 +269,8 @@ object SimilarityOps {
     * ([[graft.GraftConf.SimLshRingWidth]]). Width 4 at the sf1
     * operating point (7 bits) keeps every round-14 measurement and
     * oracle-SF plan byte-identical. The LINEAR growth (not C(bits,2)
-    * everywhere) is a measured cost call, round 15 (RingBandProbe at
-    * the 100× corpus, 10 bits): a fixed w=4 ring's recall collapses
+    * everywhere) is a measured cost call, round 15 (100× corpus, 10
+    * bits; PLANS.md, RECALL_100X.json): a fixed w=4 ring's recall collapses
     * (embedding-lsh panel 0.17, margin survivors 0.15), but the full
     * hamming-2+3 ring (w=10 + triples) buys overall panel recall only
     * 0.17→0.29 — almost all of it on WEAK 0.4–0.55-cosine pairs, the

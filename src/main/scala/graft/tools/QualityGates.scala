@@ -250,7 +250,7 @@ object QualityGates {
     // the strong band is where real near-dup semantics live; the
     // 0.4–0.55 background pairs are the geometric worst case for any
     // bounded-probe hyperplane ring and decay at scaled bits by design
-    // (measured and documented — RingBandProbe)
+    // (measured at the 100× corpus: PLANS.md, RECALL_100X.json)
     val exactStrong = exactPanel.filter(_._2 >= 0.55).map(_._1).toSet
     def panelPairs(atBits: Int): Set[(Long, Long)] =
       graft.operators.DedupOps
