@@ -176,13 +176,6 @@ object Bench {
   private def planAudit(graft: SparkSession, vanilla: Option[SparkSession],
       sfDir: String, names: Seq[String]): Seq[(String, Seq[String])] = {
     val qs = SparkEntry.queries
-    // normalize expr ids, plan ids AND lambda-variable counters — the
-    // lambda counter is session-global, so two plan builds of the same
-    // query differ in `lambda x_4` vs `lambda x_8` (a false "changed")
-    def normPlan(s: SparkSession, name: String): String =
-      qs(name)(s, sfDir).queryExecution.executedPlan.toString
-        .replaceAll("#\\d+", "#").replaceAll("plan_id=\\d+", "plan_id=")
-        .replaceAll("lambda ([a-z]+)_\\d+", "lambda $1_")
     // the vanilla session has no graft rules: conceptually the rule
     // gate is off there
     def vanillaValue(v: SparkSession, key: String): String =
@@ -190,15 +183,15 @@ object Bench {
       else v.conf.getOption(key).getOrElse("")
     names.filter(qs.contains).filterNot(graftOnly.contains).flatMap { name =>
       try {
-        val g = normPlan(graft, name)
+        val g = normPlan(graft, sfDir, name)
         vanilla match {
           case None => None
-          case Some(v) if normPlan(v, name) == g => None
+          case Some(v) if normPlan(v, sfDir, name) == g => None
           case Some(v) =>
             val causes = tunedConfKeys.filter { key =>
               val orig = graft.conf.getOption(key)
               graft.conf.set(key, vanillaValue(v, key))
-              val flipped = try normPlan(graft, name)
+              val flipped = try normPlan(graft, sfDir, name)
               finally orig.fold(graft.conf.unset(key))(graft.conf.set(key, _))
               flipped != g
             }
@@ -206,15 +199,27 @@ object Bench {
             // the residual is the injected optimizer/physical rules
             val origs = tunedConfKeys.map(k => k -> graft.conf.getOption(k))
             tunedConfKeys.foreach(k => graft.conf.set(k, vanillaValue(v, k)))
-            val allFlipped = try normPlan(graft, name)
+            val allFlipped = try normPlan(graft, sfDir, name)
             finally origs.foreach { case (k, o) =>
               o.fold(graft.conf.unset(k))(graft.conf.set(k, _)) }
             val residual =
-              if (allFlipped != normPlan(v, name)) Seq("injected-rules") else Nil
+              if (allFlipped != normPlan(v, sfDir, name)) Seq("injected-rules") else Nil
             Some(name -> (causes ++ residual))
         }
       } catch { case _: Throwable => None }
     }
+  }
+
+  /** `name`'s physical plan without the counters and JVM identity hashes
+    * that differ between two builds, built on an empty cache: both
+    * sessions share one `CacheManager`. */
+  private[graft] def normPlan(s: SparkSession, sfDir: String, name: String): String = {
+    s.catalog.clearCache()
+    SparkEntry.queries(name)(s, sfDir).queryExecution.executedPlan.toString
+      .replaceAll("#\\d+", "#").replaceAll("plan_id=\\d+", "plan_id=")
+      .replaceAll("lambda ([a-z]+)_\\d+", "lambda $1_")
+      .replaceAll("_common_expr_\\d+", "_common_expr_")
+      .replaceAll("@[0-9a-f]+", "@")
   }
 
   /** Byte budget of the stdout line: its reader keeps only the last
@@ -229,8 +234,9 @@ object Bench {
 
   /** One run's walls in seconds. `names` is the set in its own order;
     * `graft` holds the queries graft ran, `vanilla` those the stock
-    * session ran (None when the vanilla pass is off). */
-  case class Run(set: String, sf: String, names: Seq[String],
+    * session ran (None when the vanilla pass is off); `detail` names the
+    * full artifact. */
+  case class Run(set: String, sf: String, detail: String, names: Seq[String],
       graft: Map[String, Double], vanilla: Option[Map[String, Double]],
       vanillaSkipped: Seq[String], graftFailed: Seq[String]) {
     // the ratio's numerator AND denominator require BOTH engines to have
@@ -265,7 +271,7 @@ object Bench {
 
   /** The compact object: the contract fields a stdout reader parses, with
     * the walls of `queries` only (2 dp unless `scale` says otherwise). */
-  private def compact(set: String, sf: String, queries: Seq[(String, Double)],
+  private def compact(set: String, sf: String, detail: String, queries: Seq[(String, Double)],
       omittedN: Int, f: Figures, withVanilla: Boolean, scale: Int = 2): ObjectNode = {
     val o = json.createObjectNode()
     o.put("metric", "total").put("value", dp(f.total, scale)).put("unit", "sec")
@@ -276,23 +282,23 @@ object Bench {
         .put("graft_vs_vanilla_ratio", dp(f.ratio, 3))
         .put("comparable_n", f.comparableN).put("vanilla_skipped_n", f.vanillaSkippedN)
     o.put("graft_failed_n", f.graftFailedN)
-    o.put("set", set).put("detail", "BENCH_FULL.json").put("sf", sf)
+    o.put("set", set).put("detail", detail).put("sf", sf)
   }
 
   private def compact(r: Run, shown: Seq[String], omittedN: Int, scale: Int): ObjectNode =
-    compact(r.set, r.sf, shown.filter(r.graft.contains).map(n => n -> r.graft(n)),
+    compact(r.set, r.sf, r.detail, shown.filter(r.graft.contains).map(n => n -> r.graft(n)),
       omittedN, r.figures, r.vanilla.nonEmpty, scale)
 
   /** The names the stdout line shows: the longest prefix of the set's
     * own order whose line fits [[stdoutBudget]] with every figure at
-    * its widest. It reads only the names and the line's own set and sf
-    * labels (no wall, no file), so two runs of one set at one SF show
-    * and omit the same names; the rest are dropped from the set's end. */
-  def stdoutKept(set: String, sf: String, names: Seq[String]): Seq[String] = {
+    * its widest. It reads only the names and the line's own labels (no
+    * wall, no file), so two runs of one set at one SF show and omit the
+    * same names; the rest are dropped from the set's end. */
+  def stdoutKept(set: String, sf: String, detail: String, names: Seq[String]): Seq[String] = {
     val n = names.size
     val widest = Figures(widestWall * n, widestWall * n, 999.999, n, n, n)
     def fits(k: Int): Boolean =
-      json.writeValueAsBytes(compact(set, sf, names.take(k).map(_ -> widestWall),
+      json.writeValueAsBytes(compact(set, sf, detail, names.take(k).map(_ -> widestWall),
         n - k, widest, withVanilla = true)).length <= stdoutBudget
     names.take((n to 0 by -1).find(fits).getOrElse(0))
   }
@@ -334,6 +340,13 @@ object Bench {
     json.writeValueAsString(o)
   }
 
+  /** SPARK_GRAFT_BENCH_OUT names the full artifact (default
+    * `BENCH_FULL.json`); the compact one is `BENCH_COMPACT.json` beside it. */
+  def artifactPaths(out: Option[String]): (java.nio.file.Path, java.nio.file.Path) = {
+    val full = java.nio.file.Paths.get(out.getOrElse("BENCH_FULL.json"))
+    (full, full.resolveSibling("BENCH_COMPACT.json"))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -372,6 +385,7 @@ object Bench {
       .config("spark.sql.cache.serializer",
         classOf[sources.GraftCachedBatchSerializer].getName)
       .config("spark.sql.maxPlanStringLength", (8 * 1024 * 1024).toString)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     vanilla.sparkContext.setLogLevel("WARN")
     freshSession()
@@ -432,20 +446,18 @@ object Bench {
       planAudit(graft, if (withVanilla) Some(vanilla) else None, sfDir, set)
     graft.stop(); freshSession()
 
-    val run = Run(setName, sfDir, names,
+    val (fullPath, compactPath) = artifactPaths(sys.env.get("SPARK_GRAFT_BENCH_OUT"))
+    val run = Run(setName, sfDir, fullPath.getFileName.toString, names,
       gSamples.map { case (k, v) => k -> v.min },
       if (withVanilla) Some(vSamples.map { case (k, v) => k -> v.min }) else None,
       names.filter(n => graftOnly.contains(n) || vanillaFailed(n)),
       graftFailed.toSeq.sorted)
-    val kept = stdoutKept(setName, sfDir, names)
-    def write(path: String, body: String): Unit =
-      java.nio.file.Files.write(java.nio.file.Paths.get(path), (body + "\n").getBytes("UTF-8"))
-    // SPARK_GRAFT_BENCH_OUT names the full artifact (default
-    // BENCH_FULL.json); the compact twin holds every wall (no budget)
-    val out = sys.env.get("SPARK_GRAFT_BENCH_OUT")
-    write(out.getOrElse("BENCH_FULL.json"), fullArtifact(run, kept, deltas, telem))
-    write(out.map(_.replace(".json", "_COMPACT.json")).getOrElse("BENCH_COMPACT.json"),
-      compactArtifact(run))
+    val kept = stdoutKept(setName, sfDir, run.detail, names)
+    def write(path: java.nio.file.Path, body: String): Unit =
+      java.nio.file.Files.write(path, (body + "\n").getBytes("UTF-8"))
+    write(fullPath, fullArtifact(run, kept, deltas, telem))
+    // the compact twin holds every wall (no budget)
+    write(compactPath, compactArtifact(run))
     println(stdoutLine(run, kept))
   }
 }

@@ -51,9 +51,9 @@ object ConfigDocs {
       "scale) |\n")
     sb.append("| `SPARK_GRAFT_BENCH_SET` | `full` | `tpch` / `pipeline` / `corpus` (every " +
       "oracled query, per-query vanilla parity sweep) / `only:a,b,c` (local iteration) |\n")
-    sb.append("| `SPARK_GRAFT_BENCH_OUT` | `BENCH_FULL.json` | filename for Bench's full " +
-      "artifact (the compact twin lands next to it as `*_COMPACT.json`) — the corpus sweep " +
-      "writes its own file so the headline artifact is never clobbered |\n")
+    sb.append("| `SPARK_GRAFT_BENCH_OUT` | `BENCH_FULL.json` | path of Bench's full " +
+      "artifact, which the stdout line's `detail` names; the compact twin is " +
+      "`BENCH_COMPACT.json` in the same directory |\n")
     sb.append("| `SPARK_DRIVER_MEM` | `8g` | forked-run JVM heap (build.sbt) — the 6 GiB " +
       "memory-pressure protocol for the pipeline scaling runs sets `6g` |\n")
     sb.append(scaleOracleSection)

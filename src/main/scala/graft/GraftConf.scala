@@ -88,12 +88,6 @@ object GraftConf {
       "file count is low (judge r15). Every tested SF is orders of " +
       "magnitude under the default; production corpora exceed it (or " +
       "the row-group bound) and scan un-floored")
-  val FloorShare: Entry[Boolean] = Entry("spark.graft.floor.share", true,
-    "when the parallelism floor planted an exchange, Tables.loadShared " +
-      "persists the floored read so multi-pass consumers pay the scan+" +
-      "shuffle once instead of per reference (judge r16). false = " +
-      "loadShared degrades to load — the A/B bisect knob for measuring " +
-      "the share against the re-planted floor under one session")
   val SimTopK: Entry[Int] = Entry("spark.graft.similarity.topk", 5,
     "neighbors returned per query vector")
   val SimLshBits: Entry[Int] = Entry("spark.graft.similarity.lsh.bits", 8,
@@ -144,7 +138,7 @@ object GraftConf {
       DedupVocabInlineMax, DedupBroadcastMaxBytes, DedupLshBucketCap,
       DedupLshBucketAutoThreshold, DedupContainmentBroadcastMaxBytes,
       RecursiveBroadcastMaxBytes, ForceShuffledHashJoin,
-      SkipPartialAggregate, FloorMaxBytes, FloorShare, SimTopK, SimLshBits, SimLshBucketTarget,
+      SkipPartialAggregate, FloorMaxBytes, SimTopK, SimLshBits, SimLshBucketTarget,
       SimLshRingWidth,
       SimSemanticClusterTarget)
 }

@@ -193,4 +193,7 @@ object GraftSession {
       // round, and an unbounded toString is a driver-OOM vector long
       // before the plan itself is a problem. 8 MB is plenty to debug.
       .config("spark.sql.maxPlanStringLength", (8 * 1024 * 1024).toString)
+      // events.ts has shipped as TIMESTAMP(NANOS): read as int64 nanos,
+      // which Tables.load converts
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 }

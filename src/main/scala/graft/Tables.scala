@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.Column
 
-/** Table loaders + shared helpers for the graft engine's query library.
+/** The table loader + shared helpers for the graft engine's query library.
   *
   * Data model mirrors the reference's (SURVEY.md §1): plain relational
   * tables of Spark-defined schema; everything is a `DataFrame`. Scans are
@@ -154,9 +154,6 @@ object Tables {
     * scan and feed map-side-combining partials, so the added full-row
     * exchange dwarfs the single-task scan it parallelizes. */
   private val contentTables = Set("documents", "embeddings")
-  private def parallelismFloor(spark: SparkSession, path: String, df: DataFrame): DataFrame =
-    if (floorTriggers(spark, path)) df.repartition(spark.sparkContext.defaultParallelism)
-    else df
 
   /** Bounded floor trigger (judge r15): fire only when (a) the
     * parallelism win is MATERIAL — row groups at most HALF the session
@@ -178,58 +175,29 @@ object Tables {
       st.totalBytes <= GraftConf.getLong(spark, GraftConf.FloorMaxBytes)
   }
 
-  /** true when [[load]] plants the parallelism-floor exchange under
-    * this table — the gate [[loadShared]] persists behind. */
-  private[graft] def floorPlanted(spark: SparkSession, dir: String, name: String): Boolean =
-    contentTables(name) && floorTriggers(spark, s"$dir/$name.parquet")
-
-  /** [[load]] without the content-table parallelism floor — for the few
-    * documents consumers whose per-row work is LIGHT (a plain token
-    * explode feeding a map-side-combining aggregate): measured on the
-    * full battery, they pay the floor's exchange without a compute win
-    * (text_bm25_topk 0.52 → 1.05 s under the floor), the same class as
-    * the relational tables. Heavy consumers (md5 windows, minhash,
-    * shingles, vector math) keep [[load]]. */
-  def loadRaw(spark: SparkSession, dir: String, name: String): DataFrame =
-    loadImpl(spark, dir, name)
-
-  /** [[load]] for consumers that make MULTIPLE passes over the scan —
-    * k references in one plan, or construction-time collect jobs (the
-    * k-means loops). The r15 floor was re-planted per load reference
-    * with zero exchange reuse (pruning/pushdown specialize each scan, so
-    * the exchanges never canonicalize equal): dedup_semantic paid 4+
-    * full-payload shuffles (0.88 → 2.04 s), sim_ann_pq planned 8
-    * RoundRobin exchanges. When the floor planted an exchange, persist
-    * the floored read so the k passes share ONE scan+shuffle+
-    * materialization; when the floor is off — any production-scale
-    * corpus (thousands of row groups, or over the byte cap) — this IS
-    * [[load]]: no exchange, nothing persisted, pruning and pushdown
-    * reach the scan. The persist is intra-query state: Verify and Bench
-    * clearCache() after every query, so its cost is always inside the
-    * timed region and nothing leaks across queries. */
-  def loadShared(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val base = load(spark, dir, name)
-    if (floorPlanted(spark, dir, name) &&
-        GraftConf.getBoolean(spark, GraftConf.FloorShare)) base.persist()
-    else base
-  }
-
+  /** The table loader: a schema-memoized parquet read, with the floor
+    * above for content tables. It never persists and never writes a
+    * session conf. At sf0.1 on `local[4]` persisting a floored read lost
+    * wherever one plan reads it twice and paid only in driver loops that
+    * re-run jobs over it, so such a loop persists its own input (Verify
+    * and Bench clear the cache after every query, outside the timer). */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val base = loadImpl(spark, dir, name)
-    if (contentTables(name)) parallelismFloor(spark, s"$dir/$name.parquet", base)
+    val base = loadRaw(spark, dir, name)
+    if (contentTables(name) && floorTriggers(spark, s"$dir/$name.parquet"))
+      base.repartition(spark.sparkContext.defaultParallelism)
     else base
   }
 
-  private def loadImpl(spark: SparkSession, dir: String, name: String): DataFrame =
+  /** [[load]] without the parallelism floor, for a consumer whose
+    * per-row work is too light to pay for the floor's exchange. */
+  def loadRaw(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
       // events.ts has shipped as BOTH parquet TIMESTAMP(NANOS) (early
-      // testdata drops; Spark's vectorized reader rejects it outright
-      // without nanosAsLong) and plain TIMESTAMP_MICROS (current drops).
-      // Handle either: read with nanosAsLong on, then convert only if
-      // the column actually came back as raw nano longs. The data is
-      // microsecond-resolution, so the nanos→micros truncation is
-      // lossless.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // testdata drops; Spark reads them only with the session's
+      // nanosAsLong default, as raw nano longs) and plain
+      // TIMESTAMP_MICROS (current drops). Convert only if the column
+      // came back as nano longs: the data is microsecond-resolution, so
+      // the nanos→micros truncation is lossless.
       val raw = readMemoized(spark, s"$dir/$name.parquet")
       if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))

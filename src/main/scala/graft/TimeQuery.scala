@@ -9,7 +9,7 @@ object TimeQuery {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -19,6 +19,7 @@ object TimeQuery {
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       println(f"[time] $name rep $i: ${(System.nanoTime() - t0) / 1e9}%.3f s")
+      spark.catalog.clearCache() // outside the timer, as Bench.timeOne
     }
     spark.stop()
   }

@@ -26,19 +26,28 @@ import org.apache.spark.sql.types._
   * `CodegenFallback` such as `ZipWith`, an `ArraySort` comparator, or a
   * nested lambda that could not compile) leaves the function as Spark's.
   *
-  * In a compiled function the lambda variables are
-  * `objects.LambdaVariable` leaves (the `MapObjects` precedent):
-  * subexpression elimination never lifts a tree that holds one, and
-  * codegen binds them to primitive fields. Interpreted evaluation (the
-  * path taken when codegen falls back) rebuilds Spark's own function
-  * from the children and evaluates that.
+  * In a compiled function the lambda variables are [[LoopVariable]]
+  * leaves that codegen binds to primitive fields. Interpreted evaluation
+  * (the path taken when codegen falls back) rebuilds Spark's own
+  * function from the children and evaluates that.
   */
 object CompiledLambdas extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.transformUpWithPruning(_.containsPattern(HIGH_ORDER_FUNCTION)) { case p =>
+    renumber(plan.transformUpWithPruning(_.containsPattern(HIGH_ORDER_FUNCTION)) { case p =>
       p.transformExpressionsUpWithPruning(_.containsPattern(HIGH_ORDER_FUNCTION))(compile)
-    }
+    })
+
+  /** Loop-variable ids renumbered by first occurrence, negative so never
+    * an expression id: every build of one query generates the same code,
+    * so the generated-code cache hits (Spark's `ReassignLambdaVariableID`). */
+  private def renumber(plan: LogicalPlan): LogicalPlan = {
+    val ids = plan.flatMap(_.expressions.flatMap(_.collect { case l: LoopVariable => l.v.id }))
+      .distinct.zipWithIndex.toMap
+    if (ids.isEmpty) plan
+    else plan.transformAllExpressions { case l: LoopVariable =>
+      LoopVariable(l.v.copy(id = -1L - ids(l.v.id))) }
+  }
 
   private val compile: PartialFunction[Expression, Expression] = {
     case ArrayTransform(arg, LambdaFunction(body, args, _)) if codegenable(body) =>
@@ -81,34 +90,35 @@ object CompiledLambdas extends Rule[LogicalPlan] {
     * named after them. */
   private val VarNames = Seq("hofArg0", "hofArg1")
 
-  /** Fixed names, and the lambda variable's expression id, so copies of
-    * one function share their variables and stay semantically equal. */
-  private def loopVars(args: Seq[NamedExpression]): Seq[LambdaVariable] =
+  /** Fixed names, and the lambda variable's expression id until
+    * [[renumber]] replaces it. */
+  private def loopVars(args: Seq[NamedExpression]): Seq[LoopVariable] =
     args.zip(VarNames).map { case (a, name) =>
-      LambdaVariable(name, a.dataType, a.nullable, a.exprId.id)
+      LoopVariable(LambdaVariable(name, a.dataType, a.nullable, a.exprId.id))
     }
 
   private def bind(body: Expression, args: Seq[NamedExpression],
-      vars: Seq[LambdaVariable]): Expression = {
+      vars: Seq[LoopVariable]): Expression = {
     val byId = args.map(_.exprId).zip(vars).toMap
     body.transform { case v: NamedLambdaVariable if byId.contains(v.exprId) => byId(v.exprId) }
   }
 
   /** Spark's lambda over `body`: the loop variables become fresh
     * `NamedLambdaVariable`s (the interpreted reference). */
-  private[functions] def sparkLambda(body: Expression, vars: Seq[LambdaVariable]): LambdaFunction = {
-    val named = vars.map(v => NamedLambdaVariable(v.name, v.dataType, v.nullable))
-    val byVar = vars.map(v => (v.id, v.name)).zip(named).toMap
+  private[functions] def sparkLambda(body: Expression, vars: Seq[LoopVariable]): LambdaFunction = {
+    val named = vars.map(l => NamedLambdaVariable(l.v.name, l.dataType, l.nullable))
+    val byVar = vars.zip(named).toMap
     LambdaFunction(body.transform {
-      case v: LambdaVariable if byVar.contains((v.id, v.name)) => byVar((v.id, v.name))
+      case v: LoopVariable if byVar.contains(v) => byVar(v)
     }, named)
   }
 
   /** Lambda variables read in `e` and not bound by a compiled lambda
     * inside it. */
   private def freeVars(e: Expression): Set[LambdaVariable] = e match {
+    case l: LoopVariable => Set(l.v)
     case v: LambdaVariable => Set(v)
-    case c: CompiledLambda => c.children.flatMap(freeVars).toSet -- c.loopVars
+    case c: CompiledLambda => c.children.flatMap(freeVars).toSet -- c.loopVars.map(_.v)
     case _ => e.children.flatMap(freeVars).toSet
   }
 
@@ -121,7 +131,7 @@ object CompiledLambdas extends Rule[LogicalPlan] {
     * before its first element, and a cell fills at its first use inside
     * the loop. */
   private[functions] def hoist(ctx: CodegenContext, body: Expression,
-      own: Seq[LambdaVariable]): (Expression, String) = {
+      own: Seq[LoopVariable]): (Expression, String) = {
     val cells = mutable.LinkedHashMap[Expression, Hoisted]()
     def go(e: Expression, banned: Set[LambdaVariable]): Expression = e match {
       case _: LeafExpression | _: Hoisted => e
@@ -131,10 +141,10 @@ object CompiledLambdas extends Rule[LogicalPlan] {
           ctx.addMutableState(CodeGenerator.JAVA_BOOLEAN, "hoistedDone"),
           ctx.addMutableState(CodeGenerator.JAVA_BOOLEAN, "hoistedIsNull"),
           ctx.addMutableState(CodeGenerator.javaType(e.dataType), "hoistedValue")))
-      case c: CompiledLambda => c.mapChildren(go(_, banned ++ c.loopVars))
+      case c: CompiledLambda => c.mapChildren(go(_, banned ++ c.loopVars.map(_.v)))
       case _ => e.mapChildren(go(_, banned))
     }
-    val hoisted = go(body, own.toSet)
+    val hoisted = go(body, own.map(_.v).toSet)
     (hoisted, cells.values.map(h => s"${h.done} = false;").mkString("\n"))
   }
 
@@ -158,6 +168,19 @@ object CompiledLambdas extends Rule[LogicalPlan] {
   private[functions] def assign(v: ExprCode, isNull: String, value: String): String =
     (if (v.isNull.isInstanceOf[LiteralValue]) "" else s"${v.isNull} = $isNull;\n") +
       s"${v.value} = $value;"
+}
+
+/** A compiled loop's variable: Spark's `objects.LambdaVariable` held as a
+  * field, not a child, since subexpression elimination skips any tree
+  * with its `LAMBDA_VARIABLE` pattern. Elimination still never reaches a
+  * loop variable: a [[CompiledLambda]] always evaluates its array alone. */
+case class LoopVariable(v: LambdaVariable) extends LeafExpression with NonSQLExpression {
+  override def dataType: DataType = v.dataType
+  override def nullable: Boolean = v.nullable
+  override def eval(input: InternalRow): Any = v.eval(input)
+  override def genCode(ctx: CodegenContext): ExprCode = v.genCode(ctx)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = ev
+  override def toString: String = s"${v.name}#${v.id}"
 }
 
 /** A lambda-invariant subtree evaluated at most once per row: the first
@@ -196,13 +219,21 @@ private[functions] case class Hoisted(child: Expression, done: String, isNullFie
 sealed trait CompiledLambda extends ConditionalExpression {
   def argument: Expression
   /** the lambda variables, bound by this function; children */
-  def loopVars: Seq[LambdaVariable]
+  def loopVars: Seq[LoopVariable]
   /** Spark's own higher-order function over the same children */
   def reference: Expression
 
   override def alwaysEvaluatedInputs: Seq[Expression] = Seq(argument)
   override def branchGroups: Seq[Seq[Expression]] = Nil
   override def eval(input: InternalRow): Any = reference.eval(input)
+
+  /** Copies of one function (each use of a `Column` resolves its lambdas
+    * afresh) compare equal: variables renumbered as `HigherOrderFunction`'s. */
+  override lazy val canonicalized: Expression = {
+    val ids = collect { case l: LoopVariable => l.v.id }.distinct.zipWithIndex.toMap
+    val renumbered = transformUp { case l: LoopVariable => LoopVariable(l.v.copy(id = ids(l.v.id))) }
+    renumbered.withNewChildren(renumbered.children.map(_.canonicalized))
+  }
 
   /** Code run when the array `arr` of `n` elements is not null; it sets
     * `ev.value` and, for a nullable result, `ev.isNull`. */
@@ -227,12 +258,12 @@ sealed trait CompiledLambda extends ConditionalExpression {
     * element i, `body`'s invariants hoisted, and `step` consuming the
     * body's result. */
   protected def loop(ctx: CodegenContext, arr: String, n: String, body: Expression,
-      elem: LambdaVariable, index: Option[LambdaVariable], cond: String = "true")
+      elem: LoopVariable, index: Option[LoopVariable], cond: String = "true")
       (step: (String, ExprCode) => String): String = {
     val i = ctx.freshName("i")
-    val e = LambdaVariable.prepareLambdaVariable(ctx, elem)
-    val bindIndex = index.map { v =>
-      CompiledLambdas.assign(LambdaVariable.prepareLambdaVariable(ctx, v), "false", i)
+    val e = LambdaVariable.prepareLambdaVariable(ctx, elem.v)
+    val bindIndex = index.map { l =>
+      CompiledLambdas.assign(LambdaVariable.prepareLambdaVariable(ctx, l.v), "false", i)
     }.getOrElse("")
     val (hoisted, resets) = CompiledLambdas.hoist(ctx, body, loopVars)
     val b = hoisted.genCode(ctx)
@@ -250,13 +281,13 @@ sealed trait CompiledLambda extends ConditionalExpression {
        |}""".stripMargin
   }
 
-  protected def varsFrom(children: Seq[Expression], from: Int): Seq[LambdaVariable] =
-    children.drop(from).map(_.asInstanceOf[LambdaVariable])
+  protected def varsFrom(children: Seq[Expression], from: Int): Seq[LoopVariable] =
+    children.drop(from).map(_.asInstanceOf[LoopVariable])
 }
 
 /** `transform(arr, (x[, i]) -> f)`: results copied like
   * `InternalRow.copyValue`, as Spark's `ArrayTransform` does. */
-case class CompiledTransform(argument: Expression, body: Expression, loopVars: Seq[LambdaVariable])
+case class CompiledTransform(argument: Expression, body: Expression, loopVars: Seq[LoopVariable])
     extends CompiledLambda {
   @transient lazy val reference: Expression =
     ArrayTransform(argument, CompiledLambdas.sparkLambda(body, loopVars))
@@ -282,7 +313,7 @@ case class CompiledTransform(argument: Expression, body: Expression, loopVars: S
 
 /** `filter(arr, (x[, i]) -> p)`: keeps the elements whose predicate is
   * true (null counts as false), uncopied, as Spark's `ArrayFilter`. */
-case class CompiledFilter(argument: Expression, body: Expression, loopVars: Seq[LambdaVariable])
+case class CompiledFilter(argument: Expression, body: Expression, loopVars: Seq[LoopVariable])
     extends CompiledLambda {
   @transient lazy val reference: Expression =
     ArrayFilter(argument, CompiledLambdas.sparkLambda(body, loopVars))
@@ -322,7 +353,7 @@ case class CompiledFilter(argument: Expression, body: Expression, loopVars: Seq[
 
 /** `exists(arr, x -> p)`: true at the first true predicate; otherwise null
   * if a predicate was null under three-valued logic, else false. */
-case class CompiledExists(argument: Expression, body: Expression, loopVars: Seq[LambdaVariable],
+case class CompiledExists(argument: Expression, body: Expression, loopVars: Seq[LoopVariable],
     followThreeValuedLogic: Boolean) extends CompiledLambda with Predicate {
   @transient lazy val reference: Expression =
     ArrayExists(argument, CompiledLambdas.sparkLambda(body, loopVars), followThreeValuedLogic)
@@ -350,7 +381,7 @@ case class CompiledExists(argument: Expression, body: Expression, loopVars: Seq[
 
 /** `forall(arr, x -> p)`: false at the first false predicate; otherwise
   * null if a predicate was null, else true. */
-case class CompiledForAll(argument: Expression, body: Expression, loopVars: Seq[LambdaVariable])
+case class CompiledForAll(argument: Expression, body: Expression, loopVars: Seq[LoopVariable])
     extends CompiledLambda with Predicate {
   @transient lazy val reference: Expression =
     ArrayForAll(argument, CompiledLambdas.sparkLambda(body, loopVars))
@@ -381,7 +412,7 @@ case class CompiledForAll(argument: Expression, body: Expression, loopVars: Seq[
   * the final accumulator, as Spark's `ArrayAggregate`. `loopVars` holds
   * merge's (acc, x) and then finish's acc. */
 case class CompiledAggregate(argument: Expression, zero: Expression, merge: Expression,
-    finish: Expression, loopVars: Seq[LambdaVariable]) extends CompiledLambda {
+    finish: Expression, loopVars: Seq[LoopVariable]) extends CompiledLambda {
   @transient lazy val reference: Expression = ArrayAggregate(argument, zero,
     CompiledLambdas.sparkLambda(merge, loopVars.take(2)), CompiledLambdas.sparkLambda(finish, loopVars.drop(2)))
   override def dataType: DataType = finish.dataType
@@ -395,8 +426,8 @@ case class CompiledAggregate(argument: Expression, zero: Expression, merge: Expr
   override protected def perRow(ctx: CodegenContext, ev: ExprCode, arr: String, n: String)
       : String = {
     val Seq(accVar, elemVar, finishVar) = loopVars
-    val acc = LambdaVariable.prepareLambdaVariable(ctx, accVar)
-    val fin = LambdaVariable.prepareLambdaVariable(ctx, finishVar)
+    val acc = LambdaVariable.prepareLambdaVariable(ctx, accVar.v)
+    val fin = LambdaVariable.prepareLambdaVariable(ctx, finishVar.v)
     val z = zero.genCode(ctx)
     val f = finish.genCode(ctx)
     s"""${z.code}

@@ -374,6 +374,9 @@ object GraftExpressions {
     override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
     override def nullIntolerant: Boolean = true
     override def prettyName: String = "pq_encode"
+    // content hash, not identity hash: two builds print the same plan
+    override def stringArgs: Iterator[Any] =
+      Iterator(child, java.util.Arrays.deepHashCode(codebooks.asInstanceOf[Array[AnyRef]]))
 
     override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
       vecTypeCheck(prettyName, Seq(child.dataType))
@@ -484,6 +487,8 @@ object GraftExpressions {
     override def nullIntolerant: Boolean = true
     override def nullable: Boolean = true
     override def prettyName: String = "kmeans_argmin"
+    override def stringArgs: Iterator[Any] = Iterator(child,
+      java.util.Arrays.deepHashCode(cents.asInstanceOf[Array[AnyRef]]), ids.mkString("[", ",", "]"))
 
     override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
       vecTypeCheck(prettyName, Seq(child.dataType))

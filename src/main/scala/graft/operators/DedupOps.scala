@@ -782,10 +782,7 @@ object DedupOps {
   // survivors are the tiny filtered set, so that recompute is noise next
   // to the probe loop (hoisted from 2× cosine = 6× dot, down to ~1× dot).
   private val dedupEmbedding: Q = (s, dir) => {
-    // loadShared: probe + build sides are both full passes — under the
-    // parallelism floor a plain load would re-pay the payload shuffle
-    // per side (judge r16)
-    val e = loadShared(s, dir, "embeddings")
+    val e = load(s, dir, "embeddings")
       .withColumn("nrm", sqrt(aggregate(col("embedding"), lit(0.0),
         (a, x) => a + x.cast("double") * x.cast("double"))))
       .withColumn("unit", transform(col("embedding"),
@@ -1248,8 +1245,7 @@ object DedupOps {
 
   private def dedupEmbeddingLshImpl(s: SparkSession, dir: String, bits: Int,
       probeMax: Long): DataFrame = {
-    // loadShared: see dedupEmbedding — two full passes (probe + corpus)
-    val e = loadShared(s, dir, "embeddings")
+    val e = load(s, dir, "embeddings")
       .withColumn("nrm", sqrt(aggregate(col("embedding"), lit(0.0),
         (a, x) => a + x.cast("double") * x.cast("double"))))
       .withColumn("unit", transform(col("embedding"),
@@ -1475,10 +1471,7 @@ object DedupOps {
     * oracled contract (DuckDB builds the identical string and mirrors
     * the canonicalization with regexes). */
   private val dedupUrl: Q = (s, dir) => {
-    // loadRaw: per-row URL canonicalization into one hash-agg shuffle is
-    // the light-consumer class the parallelism floor measurably hurts
-    // (0.24 → 0.41 s battery, ledger-confirmed slower)
-    val raw = loadRaw(s, dir, "documents").select(col("doc_id"),
+    val raw = load(s, dir, "documents").select(col("doc_id"),
       concat(
         lit("HTTPS://"), upper(col("source")), lit(".Example.COM:443/"),
         col("lang"), lit("/page/"), (col("doc_id") % 40).cast("string"),

@@ -93,10 +93,8 @@ object TextOps {
       |FROM documents ORDER BY doc_id""".stripMargin
 
   // canonicalized content fingerprint (whitespace-normalized, lowercased)
-  // loadRaw: one md5 per row into a sort — light-consumer class, the
-  // floor's exchange was ledger-confirmed pure cost (r15)
   private val textFingerprint: Q = (s, dir) =>
-    loadRaw(s, dir, "documents")
+    load(s, dir, "documents")
       .select(col("doc_id"),
         md5(lower(regexp_replace(col("text"), "\\s+", " "))).as("fp"),
         substring(md5(lower(regexp_replace(col("text"), "\\s+", " "))), 1, 8).as("fp_short"))
@@ -743,9 +741,8 @@ object TextOps {
   private val textBm25: Q = (s, dir) => {
     val k1 = 1.2
     val b = 0.75
-    // loadRaw: a plain token explode into a map-side-combining count is
-    // the light-consumer class the floor measurably hurts (0.52 s
-    // pre-floor vs 1.05 floored, full-battery walls)
+    // unfloored: a token explode into a map-side-combining count gains
+    // nothing from the floor's exchange (raw faster in 14 of 14 runs)
     val toks = loadRaw(s, dir, "documents")
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       .filter(col("term") =!= "")
@@ -810,10 +807,7 @@ object TextOps {
     val quotaW = Window.partitionBy(col("source")).orderBy(col("doc_id"))
     val packW = Window.partitionBy(col("lang")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // loadRaw: per-row work here is a stop-ratio filter + md5 feeding
-    // three windows — the floor's exchange was a measured net loss for
-    // this light consumer (0.36 → 0.54 s battery, ledger-confirmed)
-    loadRaw(s, dir, "documents")
+    load(s, dir, "documents")
       .withColumn("n_tok", nWords)
       .filter(col("n_tok") >= 20 && col("n_tok") <= 400 && stopRatio > 0.02)
       .withColumn("fp", md5(lower(regexp_replace(col("text"), "\\s+", " "))))
@@ -1217,10 +1211,7 @@ object TextOps {
 
   private val textGreedyTokenize: Q = (s, dir) => {
     val vocabArr = array(greedyVocab.map(lit(_)): _*)
-    // loadRaw: the expensive greedy-match aggregate runs AFTER the
-    // distinct shuffle (32-way either way); the pre-shuffle side is a
-    // light explode, so the floor only added an exchange (r15 ledger)
-    val words = loadRaw(s, dir, "documents")
+    val words = load(s, dir, "documents")
       .select(explode(split(col("text"), " ")).as("word"))
       .distinct()
     // trip count from the word itself (each iteration consumes >= 1

@@ -38,8 +38,8 @@ import org.apache.spark.sql.functions._
   *    near-pair rate equals the base corpus's, which is the best any
   *    faithful replication can do (ScaleUpSpec pins both properties);
   *  - `events`: user ids shifted per replica (10x users, same per-user
-  *    session shape); `ts` kept as raw int64 nanos so `Tables.load`'s
-  *    nanos handling applies to the scaled copy identically.
+  *    session shape); `ts` keeps the source's physical type, so
+  *    `Tables.load` reads the scaled copy as it reads the source.
   *
   * `runMain graft.tools.ScaleUp [srcDir] [outDir] [factor] [tables]`
   * (defaults: /root/testdata/sf0.1 → /tmp/graft_sf1 × 10 tpch).
@@ -190,9 +190,7 @@ object ScaleUp {
       // mutually background-random instead of mutual near-pairs
       write(replicateEmbeddings(tbl("embeddings"), factor), "embeddings")
 
-      // events: ts stays raw int64 nanos (the physical type Tables.load
-      // expects to convert); user ids shift per replica
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // events: user ids shift per replica; ts keeps its physical type
       val evBase = spark.read.parquet(s"$src/events.parquet")
       val userStride = evBase.agg(max(col("user_id"))).head.getLong(0) + 1L
       val evStride = evBase.agg(max(col("event_id"))).head.getLong(0) + 1L

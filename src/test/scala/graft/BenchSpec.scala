@@ -7,15 +7,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * omits depends on the set's names alone (never on walls or on a
   * file), the line always fits the byte budget, it carries every
   * contract field a stdout reader parses, and the full artifact lists the
-  * omitted names. */
+  * omitted names. Also pins where the artifacts go and that the plan
+  * audit's normalization makes two builds of one query compare equal. */
 class BenchSpec extends AnyFunSuite {
   private val sf = "testdata/sf0.1"
   private val names = Bench.headline
-  private def run(wall: String => Double): Bench.Run = Bench.Run("full", sf, names,
+  private def run(wall: String => Double): Bench.Run = Bench.Run("full", sf, "BENCH_FULL.json", names,
     names.map(n => n -> wall(n)).toMap,
     Some(names.filterNot(Bench.graftOnly).map(n => n -> wall(n) * 1.1).toMap),
     names.filter(Bench.graftOnly), Nil)
-  private val kept = Bench.stdoutKept("full", sf, names)
+  private val kept = Bench.stdoutKept("full", sf, "BENCH_FULL.json", names)
   private def parse(s: String) = new ObjectMapper().readTree(s)
   private def shown(line: String): Seq[String] = {
     val b = Seq.newBuilder[String]
@@ -56,5 +57,27 @@ class BenchSpec extends AnyFunSuite {
     full.get("stdout_omitted").forEach(n => omitted += n.asText())
     assert(omitted.result() === names.filterNot(kept.toSet))
     assert(full.get("queries").size() === names.size)
+  }
+
+  test("the compact artifact is BENCH_COMPACT.json beside the full one, which detail names") {
+    import java.nio.file.Paths
+    assert(Bench.artifactPaths(None) ===
+      (Paths.get("BENCH_FULL.json"), Paths.get("BENCH_COMPACT.json")))
+    val out = "/tmp/bench_out/run_a.json"
+    val (full, compactPath) = Bench.artifactPaths(Some(out))
+    assert(full === Paths.get(out))
+    assert(compactPath === Paths.get("/tmp/bench_out/BENCH_COMPACT.json"))
+    val detail = full.getFileName.toString
+    val r = run(_ => 1.0).copy(detail = detail)
+    val line = parse(Bench.stdoutLine(r, Bench.stdoutKept("full", sf, detail, names)))
+    assert(line.get("detail").asText() === "run_a.json")
+    assert(parse(Bench.compactArtifact(r)).get("detail").asText() === "run_a.json")
+  }
+
+  test("two builds of dedup_semantic normalize to the same plan") {
+    val spark = GraftSparkSession.spark
+    val a = Bench.normPlan(spark, GraftSparkSession.sfDir, "dedup_semantic")
+    val b = Bench.normPlan(spark, GraftSparkSession.sfDir, "dedup_semantic")
+    assert(a === b)
   }
 }

@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.{col, transform, udf}
+import org.apache.spark.sql.functions.{aggregate, col, lit, sequence, transform, udf}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -175,6 +175,27 @@ class CompiledLambdasSpec extends AnyFunSuite {
     val want = withConfs("spark.sql.optimizer.excludedRules" -> Rule)(q.collect())
     assert(calls.get == 10)
     assert(got.map(canon).toSeq == want.map(canon).toSeq)
+  }
+
+  test("a compiled lambda used three times in one projection runs once per row") {
+    // subexpression elimination evaluates the common aggregate once, as
+    // it does Spark's own: 5 probes for the 5 elements, not 15
+    val probe = udf((w: Long) => { CompiledLambdasSpec.calls.incrementAndGet(); w })
+    val calls = CompiledLambdasSpec.calls
+    def q = {
+      val agg = aggregate(transform(col("a"), w => probe(w)), lit(0L), (acc, x) => acc + x)
+      spark.range(1).select(sequence(col("id") + 1, col("id") + 5).as("a"))
+        .select(agg.as("x"), (agg + 1).as("y"), (agg * 2).as("z"))
+    }
+    assert(q.queryExecution.optimizedPlan.exists(_.expressions.exists(
+      _.exists(_.isInstanceOf[graft.functions.CompiledAggregate]))))
+    calls.set(0)
+    val got = q.collect().toSeq
+    assert(calls.get == 5)
+    calls.set(0)
+    val want = withConfs("spark.sql.optimizer.excludedRules" -> Rule)(q.collect().toSeq)
+    assert(calls.get == 5)
+    assert(got == want && got == Seq(Row(15L, 16L, 30L)))
   }
 }
 
