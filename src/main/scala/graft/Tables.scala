@@ -177,37 +177,31 @@ object Tables {
 
   /** The table loader: a schema-memoized parquet read, with the floor
     * above for content tables. It never persists and never writes a
-    * session conf. At sf0.1 on `local[4]` persisting a floored read lost
-    * wherever one plan reads it twice and paid only in driver loops that
-    * re-run jobs over it, so such a loop persists its own input (Verify
-    * and Bench clear the cache after every query, outside the timer). */
+    * session conf. At sf0.1 on `local[4]` no call site was faster in
+    * every run with the floor skipped or with its floored read
+    * persisted, except the driver loops that re-run jobs over their
+    * input; those persist it for the loop's duration.
+    *
+    * `events.ts` has shipped both as parquet TIMESTAMP_MICROS (every
+    * current drop) and as TIMESTAMP(NANOS) (early drops). Spark reads a
+    * NANOS column only on a session with
+    * `spark.sql.legacy.parquet.nanosAsLong=true`, a `GraftSession.builder`
+    * default: there it arrives as nano longs and is converted here. On a
+    * session built without that conf a NANOS drop fails to read. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val base = loadRaw(spark, dir, name)
-    if (contentTables(name) && floorTriggers(spark, s"$dir/$name.parquet"))
-      base.repartition(spark.sparkContext.defaultParallelism)
-    else base
-  }
-
-  /** [[load]] without the parallelism floor, for a consumer whose
-    * per-row work is too light to pay for the floor's exchange. */
-  def loadRaw(spark: SparkSession, dir: String, name: String): DataFrame =
+    val path = s"$dir/$name.parquet"
+    val raw = readMemoized(spark, path)
     if (name == "events") {
-      // events.ts has shipped as BOTH parquet TIMESTAMP(NANOS) (early
-      // testdata drops; Spark reads them only with the session's
-      // nanosAsLong default, as raw nano longs) and plain
-      // TIMESTAMP_MICROS (current drops). Convert only if the column
-      // came back as nano longs: the data is microsecond-resolution, so
-      // the nanos→micros truncation is lossless.
-      val raw = readMemoized(spark, s"$dir/$name.parquet")
+      // the data is microsecond-resolution, so nanos→micros is lossless;
+      // a MICROS drop arrives as TIMESTAMP_NTZ and is cast to the
+      // session-zone TIMESTAMP (pinned UTC), the type the NANOS path yields
       if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      else
-        // TIMESTAMP_MICROS drops arrive as TIMESTAMP_NTZ; cast to the
-        // session-zone TIMESTAMP (session tz is pinned UTC) so every
-        // downstream query sees the exact type/values the NANOS path
-        // produced
-        raw.withColumn("ts", col("ts").cast("timestamp"))
-    } else readMemoized(spark, s"$dir/$name.parquet")
+      else raw.withColumn("ts", col("ts").cast("timestamp"))
+    } else if (contentTables(name) && floorTriggers(spark, path))
+      raw.repartition(spark.sparkContext.defaultParallelism)
+    else raw
+  }
 
   /** Register all tables as temp views named exactly as the files. */
   def registerAll(spark: SparkSession, dir: String): Unit =

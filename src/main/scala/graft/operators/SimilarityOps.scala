@@ -474,17 +474,35 @@ object SimilarityOps {
     kmeansAssign(e, cents)
       .agg(sum(col("dist").cast("decimal(18,6)")).cast("double")).head().getDouble(0)
 
+  /** Runs a driver loop over `e` persisted, then releases it: the loop's
+    * collect jobs read the cache instead of each re-reading the table.
+    * At sf0.1 on `local[4]` this was faster in every run at `sim_pca_top2`
+    * and, on the graft session, in median at every loop query, with the
+    * parallelism floor on or off. */
+  private def persistedFor[T](e: DataFrame)(loop: DataFrame => T): T = {
+    val p = e.persist()
+    try loop(p) finally p.unpersist(blocking = false)
+  }
+
+  /** The k-means fit every k-means query shares: centroids seeded from
+    * the k lowest vec_ids, then 2 Lloyd's rounds (three collect jobs). */
+  private def kmeansFit(e: DataFrame, k: Int): Seq[(Int, Seq[Float])] =
+    persistedFor(e) { p =>
+      var cents = kmeansInit(p, k)
+      for (_ <- 0 until 2) cents = kmeansStep(p, cents)
+      cents
+    }
+
   /** Distributed Lloyd's k-means over the embedding corpus (k=4 seeded
     * from the 4 lowest vec_ids, 2 refinement rounds — both unrolled in
     * the DuckDB oracle). Per iteration: one shuffle-free assignment scan
     * + one k×64-group mean shuffle; the only driver state is the k×64
     * centroid matrix. The shape that holds at 100 TB: corpus rows never
-    * leave their partitions, per-iteration cost is exactly one scan. */
+    * leave their partitions, per-iteration cost is one scan of the
+    * persisted input ([[kmeansFit]]). */
   private val kmeansClusters: Q = (s, dir) => {
-    // persisted: the k-means loop's three collect jobs re-read it (faster in 14 of 14 runs)
-    val e = load(s, dir, "embeddings").persist().select(col("vec_id"), col("embedding"))
-    var cents = kmeansInit(e, 4)
-    for (_ <- 0 until 2) cents = kmeansStep(e, cents)
+    val e = load(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
+    val cents = kmeansFit(e, 4)
     kmeansAssign(e, cents)
       .groupBy(col("cl"))
       .agg(count(lit(1)).as("n_vectors"),
@@ -532,8 +550,7 @@ object SimilarityOps {
     * recall@3 floor pinned in AnnRecallSpec + recall_gates.json. */
   private val annIvfKmeans: Q = (s, dir) => {
     val e = load(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    var cents = kmeansInit(e, 4)
-    for (_ <- 0 until 2) cents = kmeansStep(e, cents)
+    val cents = kmeansFit(e, 4)
     val corpus = kmeansAssign(e.filter(col("vec_id") >= 10), cents)
       .select(col("vec_id").as("cid"), col("embedding").as("c_emb"), col("cl"))
     val idArr = array(cents.map { case (id, _) => lit(id) }: _*)
@@ -1137,8 +1154,7 @@ object SimilarityOps {
     * literal, the mean shuffle still k×64 groups). */
   private val dedupSemantic: Q = (s, dir) => {
     val e = load(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    var cents = kmeansInit(e, semanticK(s, dir))
-    for (_ <- 0 until 2) cents = kmeansStep(e, cents)
+    val cents = kmeansFit(e, semanticK(s, dir))
     val assigned = kmeansAssign(e, cents)
       .select(col("vec_id"), col("embedding"), col("cl"))
     val dup = assigned
@@ -1251,23 +1267,8 @@ object SimilarityOps {
     * quotient eigenvalue estimate (‖u₃‖, the scale of the dominant
     * direction). */
   private val powerIteration: Q = (s, dir) => {
-    // persisted: the loop's three collect jobs re-read it (faster in 14 of 14 runs)
-    val e = load(s, dir, "embeddings").persist().select(col("vec_id"), col("embedding"))
-    var v: Seq[Float] = Seq.fill(64)(0.125f)
-    var eig = 0.0
-    for (_ <- 0 until 3) {
-      val vArr = array(v.map(lit(_)): _*)
-      // native codegen dot against the literal direction (bit-identical
-      // fold; the composed aggregate∘zip_with was CodegenFallback)
-      val sCol = round(GraftExpressions.dot_product(col("embedding"), vArr), 6)
-      val u = e.withColumn("s", sCol)
-        .select(col("s"), posexplode(col("embedding")).as(Seq("dim", "x")))
-        .groupBy(col("dim"))
-        .agg(sum(col("x").cast("double") * col("s")).cast("float").as("u"))
-        .collect().sortBy(_.getInt(0)).map(_.getFloat(1))
-      eig = math.sqrt(u.map(x => x.toDouble * x.toDouble).sum)
-      v = u.map(x => (x / eig).toFloat).toSeq
-    }
+    val e = load(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
+    val (v, eig) = persistedFor(e)(powerLoop(_, "embedding"))
     val spark = s
     import spark.implicits._
     v.zipWithIndex
@@ -1275,6 +1276,27 @@ object SimilarityOps {
         math.rint(eig * 1e4) / 1e4) }
       .toDF("dim", "loading", "eigenvalue")
       .orderBy(col("dim"))
+  }
+
+  /** The 3 unrolled rounds [[powerIteration]] and [[pcaTop2]] share,
+    * over the `emb` vectors of `df`: the unit direction and ‖u₃‖. */
+  private def powerLoop(df: DataFrame, emb: String): (Seq[Float], Double) = {
+    var v: Seq[Float] = Seq.fill(64)(0.125f)
+    var eig = 0.0
+    for (_ <- 0 until 3) {
+      val vArr = array(v.map(lit(_)): _*)
+      // native codegen dot against the literal direction (bit-identical
+      // fold; the composed aggregate∘zip_with was CodegenFallback)
+      val sCol = round(GraftExpressions.dot_product(col(emb), vArr), 6)
+      val u = df.withColumn("s", sCol)
+        .select(col("s"), posexplode(col(emb)).as(Seq("dim", "x")))
+        .groupBy(col("dim"))
+        .agg(sum(col("x").cast("double") * col("s")).cast("float").as("u"))
+        .collect().sortBy(_.getInt(0)).map(_.getFloat(1))
+      eig = math.sqrt(u.map(x => x.toDouble * x.toDouble).sum)
+      v = u.map(x => (x / eig).toFloat).toSeq
+    }
+    (v, eig)
   }
 
   /** Top-2 principal directions: [[powerIteration]]'s distributed
@@ -1287,32 +1309,17 @@ object SimilarityOps {
     * mirrored by the unrolled DuckDB CTE chain, so the gate is exact —
     * the same discipline as [[powerIteration]]. */
   private val pcaTop2: Q = (s, dir) => {
-    // persisted: the two power loops' six collect jobs re-read it (faster in 14 of 14 runs)
-    val e0 = load(s, dir, "embeddings").persist().select(col("vec_id"), col("embedding"))
-    def topEig(df: DataFrame, emb: String): (Seq[Float], Double) = {
-      var v: Seq[Float] = Seq.fill(64)(0.125f)
-      var eig = 0.0
-      for (_ <- 0 until 3) {
-        val vArr = array(v.map(lit(_)): _*)
-        val sCol = round(GraftExpressions.dot_product(col(emb), vArr), 6)
-        val u = df.withColumn("s", sCol)
-          .select(col("s"), posexplode(col(emb)).as(Seq("dim", "x")))
-          .groupBy(col("dim"))
-          .agg(sum(col("x").cast("double") * col("s")).cast("float").as("u"))
-          .collect().sortBy(_.getInt(0)).map(_.getFloat(1))
-        eig = math.sqrt(u.map(x => x.toDouble * x.toDouble).sum)
-        v = u.map(x => (x / eig).toFloat).toSeq
-      }
-      (v, eig)
+    val e0 = load(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
+    val ((v1, eig1), (v2, eig2)) = persistedFor(e0) { e0 =>
+      val (v1, eig1) = powerLoop(e0, "embedding")
+      val v1Arr = array(v1.map(lit(_)): _*)
+      val deflated = e0
+        .withColumn("sc", round(GraftExpressions.dot_product(col("embedding"), v1Arr), 6))
+        .select(col("vec_id"), zip_with(col("embedding"), v1Arr,
+          (x, vi) => (x.cast("double") - col("sc") * vi.cast("double"))
+            .cast("float")).as("emb2"))
+      ((v1, eig1), powerLoop(deflated, "emb2"))
     }
-    val (v1, eig1) = topEig(e0, "embedding")
-    val v1Arr = array(v1.map(lit(_)): _*)
-    val deflated = e0
-      .withColumn("sc", round(GraftExpressions.dot_product(col("embedding"), v1Arr), 6))
-      .select(col("vec_id"), zip_with(col("embedding"), v1Arr,
-        (x, vi) => (x.cast("double") - col("sc") * vi.cast("double"))
-          .cast("float")).as("emb2"))
-    val (v2, eig2) = topEig(deflated, "emb2")
     val spark = s
     import spark.implicits._
     (v1.zipWithIndex.map { case (l, i) => (1, i + 1,

@@ -741,9 +741,7 @@ object TextOps {
   private val textBm25: Q = (s, dir) => {
     val k1 = 1.2
     val b = 0.75
-    // unfloored: a token explode into a map-side-combining count gains
-    // nothing from the floor's exchange (raw faster in 14 of 14 runs)
-    val toks = loadRaw(s, dir, "documents")
+    val toks = load(s, dir, "documents")
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       .filter(col("term") =!= "")
     val tf = toks.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))

@@ -33,6 +33,7 @@ object StageProfile {
         .config("spark.sql.cache.serializer",
           classOf[graft.sources.GraftCachedBatchSerializer].getName)
         .config("spark.sql.maxPlanStringLength", (8 * 1024 * 1024).toString)
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       else graft.GraftSession.builder(master, cpus.toInt)
     val spark = builder
       .config("spark.ui.enabled", "false").getOrCreate()

@@ -13,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * round-robin exchanges in the loaded table's physical plan: exactly
   * one when the floor fires, none otherwise. Test session is local[4],
   * so the margin bound is groups * 2 <= 4. Loading writes no session
-  * conf. */
+  * conf, and reads a TIMESTAMP(NANOS) events drop only on a session
+  * with the builder's `nanosAsLong` default. */
 class ParallelismFloorSpec extends AnyFunSuite {
   private lazy val spark = GraftSparkSession.spark
 
@@ -71,5 +72,33 @@ class ParallelismFloorSpec extends AnyFunSuite {
     val before = s.conf.getAll
     Tables.all.foreach(t => Tables.load(s, GraftSparkSession.sfDir, t))
     assert(s.conf.getAll == before)
+  }
+
+  /** an events.parquet whose ts is INT64 TIMESTAMP(NANOS), the type
+    * early drops shipped; its one row is at ...123456789 ns */
+  private def writeNanosEvents(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_nanos")
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,false)); }")
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(dir.resolve("events.parquet/part-0.parquet").toString))
+      .withType(schema).build()
+    try w.write(new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
+      .newGroup().append("event_id", 1L).append("ts", 1700000000123456789L))
+    finally w.close()
+    dir.toString
+  }
+
+  test("a TIMESTAMP(NANOS) events drop loads as micros on a GraftSession.builder session") {
+    val ev = Tables.load(spark, writeNanosEvents(), "events")
+    assert(ev.selectExpr("unix_micros(ts)").head().getLong(0) == 1700000000123456L)
+  }
+
+  test("a TIMESTAMP(NANOS) events drop fails to load without the nanosAsLong default") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      Tables.load(s, writeNanosEvents(), "events").collect())
+    assert(e.getCondition == "PARQUET_TYPE_ILLEGAL")
   }
 }
