@@ -26,7 +26,8 @@ import org.apache.spark.sql.SparkSession
   * differs from the normalized VANILLA plan) and `plan_delta_causes`
   * (per query, WHICH tuned conf or injected rule causes the delta,
   * found by bisecting each tuned conf to the vanilla session's actual
-  * value) — so a graft-vs-vanilla time delta is attributable.
+  * value; `unstable-plan` when two graft builds differ) — so a
+  * graft-vs-vanilla time delta is attributable.
   *
   * Fairness protocol (per-query interleave): BOTH engines live as two
   * sessions over ONE SparkContext, and each query is timed on graft and
@@ -157,7 +158,7 @@ object Bench {
   /** Every conf the graft session tunes away from stock defaults, plus
     * the gates of the default-on injected rules — the bisection
     * candidates for plan-delta attribution. */
-  private val tunedConfKeys: Seq[String] = Seq(
+  private[graft] val tunedConfKeys: Seq[String] = Seq(
     "spark.sql.join.preferSortMergeJoin",
     "spark.sql.parquet.aggregatePushdown",
     "spark.sql.optimizer.runtime.bloomFilter.enabled",
@@ -166,13 +167,9 @@ object Bench {
 
   /** Truthful plan-delta attribution: each query's normalized
     * graft-session plan is diffed against the normalized
-    * VANILLA-session plan (both sessions exist — no proxy A/B). For a
-    * differing query, every tuned conf is bisected: flipped in the
-    * graft session to the vanilla session's ACTUAL value; the confs
-    * whose flip changes the graft plan are the causes. A delta no
-    * tuned conf explains is attributed to the always-on injected
-    * rules ("injected-rules"). Returns (query, causes) for every
-    * query whose plans differ. */
+    * VANILLA-session plan (both sessions exist — no proxy A/B), see
+    * [[auditCauses]]. Returns (query, causes) for every query whose
+    * plans differ or whose graft plan is unstable. */
   private def planAudit(graft: SparkSession, vanilla: Option[SparkSession],
       sfDir: String, names: Seq[String]): Seq[(String, Seq[String])] = {
     val qs = SparkEntry.queries
@@ -181,32 +178,47 @@ object Bench {
     def vanillaValue(v: SparkSession, key: String): String =
       if (key.startsWith("spark.graft.")) "false"
       else v.conf.getOption(key).getOrElse("")
-    names.filter(qs.contains).filterNot(graftOnly.contains).flatMap { name =>
-      try {
-        val g = normPlan(graft, sfDir, name)
-        vanilla match {
-          case None => None
-          case Some(v) if normPlan(v, sfDir, name) == g => None
-          case Some(v) =>
-            val causes = tunedConfKeys.filter { key =>
-              val orig = graft.conf.getOption(key)
-              graft.conf.set(key, vanillaValue(v, key))
-              val flipped = try normPlan(graft, sfDir, name)
-              finally orig.fold(graft.conf.unset(key))(graft.conf.set(key, _))
-              flipped != g
-            }
-            // flip ALL tuned confs at once: if the plans still differ,
-            // the residual is the injected optimizer/physical rules
-            val origs = tunedConfKeys.map(k => k -> graft.conf.getOption(k))
-            tunedConfKeys.foreach(k => graft.conf.set(k, vanillaValue(v, k)))
-            val allFlipped = try normPlan(graft, sfDir, name)
-            finally origs.foreach { case (k, o) =>
-              o.fold(graft.conf.unset(k))(graft.conf.set(k, _)) }
-            val residual =
-              if (allFlipped != normPlan(v, sfDir, name)) Seq("injected-rules") else Nil
-            Some(name -> (causes ++ residual))
-        }
-      } catch { case _: Throwable => None }
+    // the graft plan with `keys` set to the vanilla session's values
+    def flipped(v: SparkSession, name: String)(keys: Seq[String]): String = {
+      val origs = keys.map(k => k -> graft.conf.getOption(k))
+      keys.foreach(k => graft.conf.set(k, vanillaValue(v, k)))
+      try normPlan(graft, sfDir, name)
+      finally origs.foreach { case (k, o) => o.fold(graft.conf.unset(k))(graft.conf.set(k, _)) }
+    }
+    for {
+      v <- vanilla.toSeq
+      name <- names.filter(qs.contains).filterNot(graftOnly.contains)
+      causes <- try auditCauses(() => normPlan(graft, sfDir, name),
+          () => normPlan(v, sfDir, name), flipped(v, name))
+        catch { case _: Throwable => None }
+    } yield name -> causes
+  }
+
+  /** The cause of a graft plan that two builds print differently. */
+  private[graft] val UnstablePlan = "unstable-plan"
+
+  /** One query's plan-delta causes, from its plan builders. The graft
+    * plan is built twice: if the builds differ, no flip can be told
+    * from build-to-build noise, so the single cause is
+    * [[UnstablePlan]] and no conf is bisected. Otherwise, if it differs
+    * from the vanilla plan, every tuned conf is bisected: `flipped`
+    * builds the graft plan with the given confs set to the vanilla
+    * session's values, and the confs whose flip changes the plan are
+    * the causes. A delta that flipping ALL tuned confs leaves in place
+    * is the always-on injected rules ("injected-rules"). None when the
+    * plans are equal. */
+  private[graft] def auditCauses(graftPlan: () => String, vanillaPlan: () => String,
+      flipped: Seq[String] => String): Option[Seq[String]] = {
+    val g = graftPlan()
+    if (graftPlan() != g) Some(Seq(UnstablePlan))
+    else {
+      val v = vanillaPlan()
+      if (v == g) None
+      else {
+        val causes = tunedConfKeys.filter(k => flipped(Seq(k)) != g)
+        val residual = if (flipped(tunedConfKeys) != v) Seq("injected-rules") else Nil
+        Some(causes ++ residual)
+      }
     }
   }
 
@@ -377,15 +389,8 @@ object Bench {
     // SPARK_GRAFT_MASTER=local-cluster[n,c,mem] benches across real
     // executor JVMs; both sessions share the one (cluster) context
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val vanilla = GraftSession.withClusterConf(SparkSession.builder(), master)
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val vanilla = GraftSession.stockBuilder(master, cpus.toInt)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.cache.serializer",
-        classOf[sources.GraftCachedBatchSerializer].getName)
-      .config("spark.sql.maxPlanStringLength", (8 * 1024 * 1024).toString)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     vanilla.sparkContext.setLogLevel("WARN")
     freshSession()

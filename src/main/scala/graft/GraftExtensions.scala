@@ -196,4 +196,19 @@ object GraftSession {
       // events.ts has shipped as TIMESTAMP(NANOS): read as int64 nanos,
       // which Tables.load converts
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+  /** The vanilla twin: a plain session with NO extensions and stock
+    * Spark defaults, plus only master, shuffle-partition and UTC parity,
+    * the engine's cache encoding (a static conf both sessions of one
+    * context share), the plan-string cap and the `nanosAsLong` read that
+    * `Tables.load` needs. Built first, it creates the context with these
+    * neutral confs only, so `spark.sql.extensions` never leaks into it. */
+  def stockBuilder(master: String, shufflePartitions: Int): SparkSession.Builder =
+    withClusterConf(SparkSession.builder(), master)
+      .master(master)
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.cache.serializer", classOf[sources.GraftCachedBatchSerializer].getName)
+      .config("spark.sql.maxPlanStringLength", (8 * 1024 * 1024).toString)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 }

@@ -997,6 +997,16 @@ object DedupOps {
     * (doc_id, label) for ALL docs; singletons label themselves. `pairs`
     * is read once, by the first materialization.
     *
+    * Driver finish: after every materialization, the first one
+    * included, an edge set of at most `localFinishMaxEdges` edges
+    * (default [[LocalFinishMaxEdges]] = 2^20 edges, 16 MiB of ids) is
+    * collected as longs in one job and finished by union-find on the
+    * driver, which emits the same (node → component min) stars the
+    * fixpoint would: a star round keeps every node and every
+    * component's minimum. The count the round already takes checks the
+    * bound. Above it the star rounds run unchanged, gated by `except`
+    * and capped at 25 rounds.
+    *
     * `releaseInput = true` means this function CONSUMES `pairs`: once
     * the initial edge set is materialized, any localCheckpoint blocks
     * behind `pairs` are unpersisted (they would otherwise be dead
@@ -1004,7 +1014,8 @@ object DedupOps {
     * read `pairs` again afterwards — its lineage is truncated and
     * cannot be recomputed. Default false: caller keeps ownership. */
   private[graft] def propagateMinLabels(pairs: DataFrame, docs: DataFrame,
-      releaseInput: Boolean = false): DataFrame = {
+      releaseInput: Boolean = false,
+      localFinishMaxEdges: Long = LocalFinishMaxEdges): DataFrame = {
     // NO initial distinct: the LSH pair lists every dedup caller feeds
     // in are already distinct by construction, and the star rounds
     // dedupe their own output every round regardless (duplicate input
@@ -1021,12 +1032,13 @@ object DedupOps {
     // handed over ownership, its checkpoint blocks die here
     if (releaseInput) releaseCheckpoint(pairs)
     var converged = prevCnt == 0L
+    var local = !converged && prevCnt <= localFinishMaxEdges
     var rounds = 0
     // both stars take a per-node minimum over u's neighbors: a window
     // partitioned on u, so each star reads one exchange on u and no
     // self-join re-reads its input
     val byU = org.apache.spark.sql.expressions.Window.partitionBy(col("u"))
-    while (!converged && rounds < 25) {
+    while (!converged && !local && rounds < 25) {
       // LARGE-STAR over the symmetrized edges: m = min({u} ∪ Γ(u)), and
       // every larger neighbor v re-attaches as (v, m). Its output is
       // shuffled on the new u once, for the distinct and small-star.
@@ -1042,8 +1054,10 @@ object DedupOps {
         .select(explode(array(col("v"), col("u"))).as("u"), col("m").as("v"))
         .filter(col("u") =!= col("v"))
         .distinct())
-      // cheap count gate first; exact set equality only when counts match
-      converged = cnt == prevCnt && small.except(edges).isEmpty
+      // a bounded edge set finishes on the driver; above the bound, the
+      // cheap count gate first, exact set equality only when counts match
+      local = cnt <= localFinishMaxEdges
+      converged = !local && cnt == prevCnt && small.except(edges).isEmpty
       // the except above was the last reader of the superseded edge set
       // — release its checkpoint blocks before the next round allocates
       releaseCheckpoint(edges)
@@ -1057,13 +1071,63 @@ object DedupOps {
     // output is always one row per doc_id (duplicate rows here would
     // silently inflate downstream cluster sizes).
     val stars =
-      if (converged) edges
+      if (local) finishOnDriver(edges)
+      else if (converged) edges
       else edges.groupBy(col("u")).agg(min(col("v")).as("v"))
     docs.select(col("doc_id"))
       .join(stars.select(col("u").as("doc_id"), col("v").as("star_lbl")),
         Seq("doc_id"), "left_outer")
       .select(col("doc_id"),
         coalesce(col("star_lbl"), col("doc_id")).as("label"))
+  }
+
+  /** Edge count at or below which [[propagateMinLabels]] finishes on the
+    * driver: 2^20 edges of two longs are 16 MiB of collected ids, and
+    * the union-find over their at most 2^21 nodes a few dozen MiB more. */
+  private[graft] val LocalFinishMaxEdges: Long = 1L << 20
+
+  /** (node → component min) for every non-root node of a materialized
+    * (u, v) edge set, by union-find on the driver: the ids are collected
+    * as longs in one job with no shuffle, and the smaller root wins each
+    * union, so every root is its component's minimum. Releases `edges`'
+    * checkpoint. */
+  private def finishOnDriver(edges: DataFrame): DataFrame = {
+    val ids = edges.select(col("u").cast("long"), col("v").cast("long"))
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val b = Array.newBuilder[Long]
+        rows.foreach { r => b += r.getLong(0); b += r.getLong(1) }
+        Iterator.single(b.result())
+      }.collect().flatten
+    releaseCheckpoint(edges)
+    // sorted distinct node ids, deduplicated in place without boxing: a
+    // node's index orders like its id
+    val sorted = ids.sorted
+    var n = 0
+    for (i <- sorted.indices) if (n == 0 || sorted(i) != sorted(n - 1)) {
+      sorted(n) = sorted(i); n += 1
+    }
+    val nodes = java.util.Arrays.copyOf(sorted, n)
+    val parent = Array.tabulate(nodes.length)(identity)
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    var e = 0
+    while (e < ids.length) {
+      val a = find(java.util.Arrays.binarySearch(nodes, ids(e)))
+      val b = find(java.util.Arrays.binarySearch(nodes, ids(e + 1)))
+      if (a != b) parent(math.max(a, b)) = math.min(a, b)
+      e += 2
+    }
+    val stars = nodes.indices.iterator.map(i => i -> find(i)).collect {
+      case (i, r) if r != i => org.apache.spark.sql.Row(nodes(i), nodes(r))
+    }.toSeq
+    val t = edges.schema("u").dataType
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("u BIGINT, v BIGINT")
+    edges.sparkSession.createDataFrame(
+      java.util.Arrays.asList(stars: _*), schema)
+      .select(col("u").cast(t), col("v").cast(t))
   }
 
   private val dedupClustersSql =

@@ -370,12 +370,16 @@ object GraphOps {
     * is chained by consecutive-user edges (LINEAR edge count with the same
     * components as the full clique — the standard trick that keeps a hot
     * bucket from emitting its quadratic pair set). Components resolve via
-    * the shared large-star/small-star CC ([[DedupOps.propagateMinLabels]]),
-    * so the edge set contracts geometrically per round, and each round
-    * materializes once: its output edge set, by one checkpointing count
-    * job. The pair list itself is not materialized: the kernel's first
-    * checkpoint reads it once. Oracle: DuckDB recursive-CTE transitive
-    * closure over the identical edge list. */
+    * the shared large-star/small-star CC ([[DedupOps.propagateMinLabels]]).
+    * The pair list itself is not materialized: the kernel's first
+    * checkpoint reads it once, and its count checks the driver-finish
+    * bound ([[DedupOps.LocalFinishMaxEdges]], 2^20 edges = 16 MiB of
+    * ids). An edge set within it is collected in one job and finished
+    * by union-find on the driver: 5 construction jobs at sf0.1. Above
+    * it, star rounds contract the edge set geometrically, each
+    * materialized once by one checkpointing count job, until the set
+    * fits the bound or reaches the fixpoint. Oracle: DuckDB
+    * recursive-CTE transitive closure over the identical edge list. */
   private val connectedComponents: Q = (s, dir) => {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("k"), col("hr")).orderBy(col("user_id"))

@@ -25,15 +25,7 @@ object StageProfile {
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
     val vanilla = sys.env.get("SPARK_GRAFT_PROFILE_ENGINE").contains("vanilla")
     val builder =
-      if (vanilla) org.apache.spark.sql.SparkSession.builder().master(master)
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        // mirror Bench's vanilla column exactly (it shares the engine's
-        // cache encoding so cached-plan queries compare like-for-like)
-        .config("spark.sql.cache.serializer",
-          classOf[graft.sources.GraftCachedBatchSerializer].getName)
-        .config("spark.sql.maxPlanStringLength", (8 * 1024 * 1024).toString)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      if (vanilla) graft.GraftSession.stockBuilder(master, cpus.toInt)
       else graft.GraftSession.builder(master, cpus.toInt)
     val spark = builder
       .config("spark.ui.enabled", "false").getOrCreate()

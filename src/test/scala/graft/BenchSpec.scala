@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * omits depends on the set's names alone (never on walls or on a
   * file), the line always fits the byte budget, it carries every
   * contract field a stdout reader parses, and the full artifact lists the
-  * omitted names. Also pins where the artifacts go and that the plan
-  * audit's normalization makes two builds of one query compare equal. */
+  * omitted names. Also pins where the artifacts go, that the plan
+  * audit's normalization makes two builds of one query compare equal,
+  * and that an unstable graft plan is reported as such, not bisected. */
 class BenchSpec extends AnyFunSuite {
   private val sf = "testdata/sf0.1"
   private val names = Bench.headline
@@ -72,6 +73,29 @@ class BenchSpec extends AnyFunSuite {
     val line = parse(Bench.stdoutLine(r, Bench.stdoutKept("full", sf, detail, names)))
     assert(line.get("detail").asText() === "run_a.json")
     assert(parse(Bench.compactArtifact(r)).get("detail").asText() === "run_a.json")
+  }
+
+  test("an unstable graft plan is reported as unstable-plan and bisects no conf") {
+    var builds = 0
+    val flips = Seq.newBuilder[Seq[String]]
+    def flipped(keys: Seq[String]): String = { flips += keys; "G" }
+    // two builds that print differently: the one cause, no flip built
+    val unstable = Bench.auditCauses(() => { builds += 1; s"G$builds" }, () => "V", flipped)
+    assert(unstable === Some(Seq(Bench.UnstablePlan)))
+    assert(builds === 2)
+    assert(flips.result().isEmpty)
+    // a stable plan equal to vanilla has no causes
+    assert(Bench.auditCauses(() => "V", () => "V", flipped) === None)
+    assert(flips.result().isEmpty)
+    // a stable delta bisects every tuned conf, then all of them at once
+    val key = Bench.tunedConfKeys.head
+    val stable = Bench.auditCauses(() => "G", () => "V", keys => {
+      flips += keys
+      if (keys == Bench.tunedConfKeys) "V" else if (keys == Seq(key)) "G2" else "G"
+    })
+    assert(stable === Some(Seq(key)))
+    assert(flips.result() === Bench.tunedConfKeys.map(Seq(_)) :+ Bench.tunedConfKeys)
+    assert(Bench.auditCauses(() => "G", () => "V", _ => "G") === Some(Seq("injected-rules")))
   }
 
   test("two builds of dedup_semantic normalize to the same plan") {

@@ -261,11 +261,32 @@ class PropertySpec extends AnyFunSuite {
       }
       val expect = nodes.map(n => n -> find(find(n))).toMap
         .map { case (n, r) => n -> nodes.filter(m => find(m) == r).min }
-      val pairs = edges.toDF("doc_a", "doc_b").localCheckpoint()
+      // both directions: the initial edge set holds every edge twice,
+      // and on each shape here a star round brings it to at most `mid`
+      // edges, so a `mid` bound fires the driver finish after one or
+      // more rounds (the job counts below check that it did)
+      val pairs = (edges ++ edges.map(_.swap)).toDF("doc_a", "doc_b").localCheckpoint()
       val docs = nodes.toDF("doc_id")
-      val got = operators.DedupOps.propagateMinLabels(pairs, docs)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == expect, s"CC labels diverge on a ${edges.size}-edge graph")
+      val mid = edges.map { case (a, b) => (a max b, a min b) }.filter(e => e._1 != e._2)
+        .distinct.size.toLong
+      def labels(bound: Long): (Map[Long, Long], Int) = {
+        val (got, jobs) = JobCounter(spark) {
+          operators.DedupOps.propagateMinLabels(pairs, docs, localFinishMaxEdges = bound)
+            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        }
+        (got, jobs.size)
+      }
+      // star rounds only; the driver finish at once; the finish after
+      // some rounds, which runs more jobs than the first and fewer than
+      // the second
+      val (stars, starJobs) = labels(0L)
+      val (atOnce, onceJobs) = labels(operators.DedupOps.LocalFinishMaxEdges)
+      val (afterRounds, midJobs) = labels(mid)
+      for ((path, got) <- Seq("star rounds" -> stars, "driver finish" -> atOnce,
+          s"finish at $mid edges" -> afterRounds))
+        assert(got == expect, s"$path: CC labels diverge on a ${edges.size}-edge graph")
+      assert(onceJobs < midJobs && midJobs < starJobs,
+        s"jobs: finish at once $onceJobs, at $mid edges $midJobs, star rounds only $starJobs")
     }
   }
 }

@@ -131,8 +131,9 @@ class ScaleFeaturesSpec extends AnyFunSuite {
     val pairs = (0 until n - 1).map(i => (i.toLong, i + 1L))
       .toDF("doc_a", "doc_b").localCheckpoint()
     val docs = (0 until n).map(_.toLong).toDF("doc_id")
+    // star rounds forced: a bound of 0 edges never finishes on the driver
     val (labels, jobs) = JobCounter(spark) {
-      operators.DedupOps.propagateMinLabels(pairs, docs)
+      operators.DedupOps.propagateMinLabels(pairs, docs, localFinishMaxEdges = 0L)
     }
     // one materialization per round, pinned: the first checkpoint's
     // count is 1 job; each star round runs 4 (the symmetrized-edge,
@@ -143,9 +144,15 @@ class ScaleFeaturesSpec extends AnyFunSuite {
     assert(jobs.size == 1 + 5 * (4 + 2), jobs.mkString("\n"))
     val planLen = labels.queryExecution.optimizedPlan.toString.length
     assert(planLen < 10000, s"plan string grew to $planLen chars — lineage not truncated")
-    val out = labels.collect()
-    assert(out.length == n && out.forall(_.getLong(1) == 0L),
-      "every node in the path must adopt label 0")
+    // the default bound finishes the same path on the driver at once:
+    // the first checkpoint's count, then one collect of its ids
+    val (finished, finishJobs) = JobCounter(spark) {
+      operators.DedupOps.propagateMinLabels(pairs, docs)
+    }
+    assert(finishJobs.size == 2, finishJobs.mkString("\n"))
+    for (out <- Seq(labels.collect(), finished.collect()))
+      assert(out.length == n && out.forall(_.getLong(1) == 0L),
+        "every node in the path must adopt label 0")
   }
 
   test("scala UDF registry surface (the .so-registry analog)") {
