@@ -43,11 +43,20 @@ import org.apache.spark.sql.SparkSession
   * the full artifact ([[fullArtifact]], SPARK_GRAFT_BENCH_OUT) and its
   * compact twin.
   *
-  * Env knobs: SPARK_GRAFT_BENCH_SET=tpch restricts to the 22 TPC-H
-  * queries (used for the sf1 scale run where only TPC-H tables are
-  * generated); SPARK_GRAFT_BENCH_VANILLA=0 skips the vanilla passes;
+  * Each timed query runs under the engine's query trace
+  * ([[PlanHealth.traced]]), construction apart from execution; the full
+  * artifact's `layers` holds both layers of each query's min-wall rep,
+  * per engine that ran it.
+  *
+  * Env knobs (CONFIG.md): SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS and
+  * SPARK_GRAFT_MASTER set the input and the master;
+  * SPARK_GRAFT_BENCH_SET=tpch restricts to the 22 TPC-H queries (used
+  * for the sf1 scale run where only TPC-H tables are generated);
+  * SPARK_GRAFT_BENCH_VANILLA=0 skips the vanilla passes;
+  * SPARK_GRAFT_BENCH_ENGINE=vanilla times the stock session alone;
   * SPARK_GRAFT_BENCH_ROUNDS=1 reverts to single-shot timing;
-  * SPARK_GRAFT_BENCH_TELEMETRY=1 adds an untimed metrics pass.
+  * SPARK_GRAFT_BENCH_CONF overrides graft session confs;
+  * SPARK_GRAFT_BENCH_OUT names the full artifact.
   */
 object Bench {
   val tpch: Seq[String] = Seq(
@@ -141,18 +150,25 @@ object Bench {
     spark.catalog.clearCache()
   }
 
-  private def timeOne(spark: SparkSession, sfDir: String, name: String): (Double, Boolean) = {
-    val qs = SparkEntry.queries
-    val t0 = System.nanoTime()
-    val ok =
-      try { qs(name)(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-      catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); false }
-    val dt = (System.nanoTime() - t0) / 1e9
+  /** One rep's traced layers: construction, then execution. */
+  type Layers = (PlanHealth.Layer, PlanHealth.Layer)
+
+  /** the wall of one rep in seconds: its two layers' walls */
+  def wall(ls: Layers): Double = (ls._1.wallNs + ls._2.wallNs) / 1e9
+
+  /** One traced rep of `name`; None when it fails. */
+  private def timeOne(spark: SparkSession, sfDir: String, name: String): Option[Layers] = {
+    val layers =
+      try {
+        val (df, built) = PlanHealth.traced(spark)(SparkEntry.queries(name)(spark, sfDir))
+        val (_, ran) = PlanHealth.traced(spark)(df.write.format("noop").mode("overwrite").save())
+        Some((built, ran))
+      } catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); None }
     // release intra-query caches OUTSIDE the timer: a query's persist()
     // is its own cost (timed above), but leaked storage blocks from
     // one query must not squeeze executor memory for the next
     spark.catalog.clearCache()
-    (dt, ok)
+    layers
   }
 
   /** Every conf the graft session tunes away from stock defaults, plus
@@ -325,9 +341,10 @@ object Bench {
 
   /** The full artifact: the compact fields at 3 dp plus the vanilla
     * walls, the skipped, failed and stdout-omitted names, the plan audit
-    * and the telemetry. */
+    * and, per engine, the `layers` of each query it ran (`layers`:
+    * engine -> query -> its min-wall rep's layers). */
   def fullArtifact(r: Run, kept: Seq[String], deltas: Seq[(String, Seq[String])],
-      telem: Seq[(String, Map[String, Long])]): String = {
+      layers: Map[String, Map[String, Layers]]): String = {
     val o = compact(r, r.names, r.names.size - kept.size, scale = 3)
     o.remove("detail")
     r.vanilla.foreach { v =>
@@ -340,13 +357,15 @@ object Bench {
     list(o, "plan_changed_by_rules", deltas.map(_._1))
     val causes = o.putObject("plan_delta_causes")
     deltas.foreach { case (n, cs) => list(causes, n, cs) }
-    if (telem.nonEmpty) {
-      val t = o.putObject("telemetry")
-      telem.foreach { case (n, m) =>
-        t.putObject(n).put("output_rows", m("output_rows"))
-          .put("shuffle_records", m("shuffle_records_written"))
-          .put("shuffle_mb", dp(m("shuffle_bytes_written") / 1e6, 2))
-          .put("spill_mb", dp(m("spill_bytes") / 1e6, 2))
+    val ls = o.putObject("layers")
+    for ((engine, byQuery) <- layers.toSeq.sortBy(_._1)) {
+      val e = ls.putObject(engine)
+      for (n <- r.names; (built, ran) <- byQuery.get(n)) {
+        val q = e.putObject(n)
+        for ((phase, l) <- Seq("construction" -> built, "execution" -> ran)) {
+          val p = q.putObject(phase)
+          l.fields.foreach { case (k, v) => p.put(k, v) }
+        }
       }
     }
     json.writeValueAsString(o)
@@ -403,13 +422,12 @@ object Bench {
     // experiment knob: comma-separated k=v session-conf overrides for the
     // GRAFT session only (time-bisecting a plan-delta cause found by the
     // audit, e.g. SPARK_GRAFT_BENCH_CONF=spark.sql.join.preferSortMergeJoin=true)
-    sys.env.get("SPARK_GRAFT_BENCH_CONF").foreach(_.split(',').filter(_.contains('='))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); graft.conf.set(k, v) })
+    sys.env.get("SPARK_GRAFT_BENCH_CONF").foreach(GraftSession.confOverrides(_)
+      .foreach { case (k, v) => graft.conf.set(k, v) })
 
-    val qs = SparkEntry.queries
-    val names = set.filter(qs.contains)
-    var gSamples = Map.empty[String, List[Double]].withDefaultValue(Nil)
-    var vSamples = Map.empty[String, List[Double]].withDefaultValue(Nil)
+    val names = set.filter(SparkEntry.queries.contains)
+    // per query, the min-wall rep on each engine
+    val gBest, vBest = scala.collection.mutable.Map.empty[String, Layers]
     // a failed run's near-zero elapsed time must not enter either column:
     // failures are dropped and listed (vanilla_skipped / graft_failed)
     val vanillaFailed = scala.collection.mutable.Set[String]()
@@ -417,16 +435,14 @@ object Bench {
     warmup(graft, sfDir)
     if (withVanilla) warmup(vanilla, sfDir)
     def timePair(name: String, graftFirst: Boolean): Unit = {
-      def g(): Unit = if (!graftFailed(name)) {
-        val (dt, ok) = timeOne(graft, sfDir, name)
-        if (ok) gSamples += (name -> (dt :: gSamples(name)))
-        else { graftFailed += name; gSamples -= name }
+      def on(s: SparkSession, best: scala.collection.mutable.Map[String, Layers],
+          failed: scala.collection.mutable.Set[String]): Unit = timeOne(s, sfDir, name) match {
+        case Some(ls) => if (best.get(name).forall(b => wall(ls) < wall(b))) best(name) = ls
+        case None => failed += name; best -= name
       }
-      def v(): Unit = if (withVanilla && !graftOnly.contains(name) && !vanillaFailed(name)) {
-        val (dt, ok) = timeOne(vanilla, sfDir, name)
-        if (ok) vSamples += (name -> (dt :: vSamples(name)))
-        else { vanillaFailed += name; vSamples -= name }
-      }
+      def g(): Unit = if (!graftFailed(name)) on(graft, gBest, graftFailed)
+      def v(): Unit = if (withVanilla && !graftOnly.contains(name) && !vanillaFailed(name))
+        on(vanilla, vBest, vanillaFailed)
       if (graftFirst) { g(); v() } else { v(); g() }
     }
     for (round <- 1 to rounds) {
@@ -434,33 +450,21 @@ object Bench {
       // residual first-in-pair page-cache effect
       for (name <- names) timePair(name, graftFirst = round % 2 == 1)
     }
-    // Optional per-query runtime telemetry (SPARK_GRAFT_BENCH_TELEMETRY=1):
-    // one extra UNTIMED execution per query on the graft session, reading
-    // the spill/shuffle volumes from the populated SQLMetrics.
-    val telemetry = sys.env.getOrElse("SPARK_GRAFT_BENCH_TELEMETRY", "0") == "1"
-    val telem: Seq[(String, Map[String, Long])] = if (telemetry) names.flatMap { n =>
-      try {
-        val df = qs(n)(graft, sfDir)
-        df.queryExecution.toRdd.foreach(_ => ())
-        val m = PlanHealth.runtimeSummary(df.queryExecution)
-        graft.catalog.clearCache()
-        Some(n -> m)
-      } catch { case _: Throwable => graft.catalog.clearCache(); None }
-    } else Nil
     val deltas: Seq[(String, Seq[String])] =
       planAudit(graft, if (withVanilla) Some(vanilla) else None, sfDir, set)
     graft.stop(); freshSession()
 
     val (fullPath, compactPath) = artifactPaths(sys.env.get("SPARK_GRAFT_BENCH_OUT"))
     val run = Run(setName, sfDir, fullPath.getFileName.toString, names,
-      gSamples.map { case (k, v) => k -> v.min },
-      if (withVanilla) Some(vSamples.map { case (k, v) => k -> v.min }) else None,
+      gBest.toMap.map { case (k, ls) => k -> wall(ls) },
+      if (withVanilla) Some(vBest.toMap.map { case (k, ls) => k -> wall(ls) }) else None,
       names.filter(n => graftOnly.contains(n) || vanillaFailed(n)),
       graftFailed.toSeq.sorted)
     val kept = stdoutKept(setName, sfDir, run.detail, names)
     def write(path: java.nio.file.Path, body: String): Unit =
       java.nio.file.Files.write(path, (body + "\n").getBytes("UTF-8"))
-    write(fullPath, fullArtifact(run, kept, deltas, telem))
+    write(fullPath, fullArtifact(run, kept, deltas,
+      Map("graft" -> gBest.toMap, "vanilla" -> vBest.toMap).filter(_._2.nonEmpty)))
     // the compact twin holds every wall (no budget)
     write(compactPath, compactArtifact(run))
     println(stdoutLine(run, kept))

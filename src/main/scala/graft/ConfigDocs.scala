@@ -34,8 +34,11 @@ object ConfigDocs {
       "SparkUpgradeException) |\n")
     sb.append("\nHarness environment variables (Verify / Bench mains, not library confs):\n\n")
     sb.append("| Var | Default | Description |\n|---|---|---|\n")
+    sb.append("| `SPARK_GRAFT_SF_DIR` | `/root/testdata/sf0.1` | input SF directory of Bench |\n")
+    sb.append("| `SPARK_GRAFT_CPUS` | `4` | local master width and shuffle partitions of " +
+      "Verify, Bench and TimeQuery (the `tools/` mains default to 8-32) |\n")
     sb.append("| `SPARK_GRAFT_MASTER` | `local[$SPARK_GRAFT_CPUS]` | Spark master for " +
-      "Verify/Bench. `local-cluster[n,cores,memMb]` runs the battery across real separate " +
+      "Verify/Bench/TimeQuery. `local-cluster[n,cores,memMb]` runs the battery across real separate " +
       "executor JVMs (cross-process serialization evidence); GraftSession then ships the " +
       "driver's classpath + JDK-17 add-opens to the executors and pins " +
       "`spark.executor.memory` to the worker size. Requires `SPARK_SCALA_VERSION=2.13` in " +
@@ -51,9 +54,20 @@ object ConfigDocs {
       "scale) |\n")
     sb.append("| `SPARK_GRAFT_BENCH_SET` | `full` | `tpch` / `pipeline` / `corpus` (every " +
       "oracled query, per-query vanilla parity sweep) / `only:a,b,c` (local iteration) |\n")
+    sb.append("| `SPARK_GRAFT_BENCH_ROUNDS` | `2` | timed rounds per query and engine; " +
+      "Bench reports each query's min-wall round |\n")
+    sb.append("| `SPARK_GRAFT_BENCH_VANILLA` | `1` | `0` skips the vanilla twin's passes |\n")
+    sb.append("| `SPARK_GRAFT_BENCH_ENGINE` | `graft` | `vanilla` times the stock session " +
+      "alone, for scales where two sessions in one JVM do not fit |\n")
     sb.append("| `SPARK_GRAFT_BENCH_OUT` | `BENCH_FULL.json` | path of Bench's full " +
       "artifact, which the stdout line's `detail` names; the compact twin is " +
       "`BENCH_COMPACT.json` in the same directory |\n")
+    sb.append("| `GRAFT_VERIFY_TRACE` | unset | set: Verify prints the stack trace of " +
+      "each failed query |\n")
+    sb.append("| `SPARK_GRAFT_MEMORY_FRACTION` | `0.6` | `spark.memory.fraction` of " +
+      "tools.SpillAtScale |\n")
+    sb.append("| `SPARK_GRAFT_STORAGE_FRACTION` | `0.5` | `spark.memory.storageFraction` " +
+      "of tools.SpillAtScale |\n")
     sb.append("| `SPARK_DRIVER_MEM` | `8g` | forked-run JVM heap (build.sbt) — the 6 GiB " +
       "memory-pressure protocol for the pipeline scaling runs sets `6g` |\n")
     sb.append(scaleOracleSection)

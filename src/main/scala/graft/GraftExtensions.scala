@@ -197,6 +197,14 @@ object GraftSession {
       // which Tables.load converts
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 
+  /** Session-conf overrides `k=v[,k=v...]` (SPARK_GRAFT_SQL_CONF,
+    * SPARK_GRAFT_BENCH_CONF). Pairs split on a comma only when what
+    * follows looks like another `key=`, so a comma INSIDE a value (a rule
+    * or class list) stays part of that value. */
+  def confOverrides(spec: String): Seq[(String, String)] =
+    spec.split(",(?=[^=,]+=)").toSeq.filter(_.contains('='))
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
+
   /** The vanilla twin: a plain session with NO extensions and stock
     * Spark defaults, plus only master, shuffle-partition and UTC parity,
     * the engine's cache encoding (a static conf both sessions of one

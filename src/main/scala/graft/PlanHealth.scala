@@ -2,6 +2,8 @@ package graft
 
 import scala.collection.mutable
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted,
+  SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -10,6 +12,7 @@ import org.apache.spark.sql.execution.{DataSourceScanExec, FileSourceScanExec, Q
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanExecBase
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, Exchange}
+import org.apache.spark.sql.graft.BusBridge
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Plan-health reporter — the GlutenFallbackReporter / gluten-ui analog
@@ -18,7 +21,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * query's physical plan (shuffle/broadcast counts, codegen coverage,
   * scan pushdown presence) and name the expressions that still run
   * interpreted, so regressions in plan shape are observable without
-  * reading full explains.
+  * reading full explains. It is also the engine's one query trace
+  * ([[traced]]): what the jobs of one block of code did, layer by layer.
   */
 object PlanHealth {
 
@@ -32,7 +36,10 @@ object PlanHealth {
       scansWithPushedFilters: Int,
       /** distinct interpreted (`CodegenFallback`) expression classes */
       interpreted: Seq[String],
-      failed: Boolean)
+      failed: Boolean,
+      /** milliseconds per `QueryPlanningTracker` phase (parsing,
+        * analysis, optimization, planning) */
+      phases: Map[String, Long] = Map.empty)
 
   /** Every node of a physical plan: through AQE's adaptive wrapper (its
     * current plan — the initial one before execution, the final one
@@ -52,8 +59,9 @@ object PlanHealth {
   def codegenFallbacks(plan: SparkPlan): Seq[String] =
     interpreted(plan).map(_.getClass.getSimpleName.stripSuffix("$"))
 
-  private def summarize(name: String, plan: SparkPlan, durationNs: Long,
+  private def summarize(name: String, qe: QueryExecution, durationNs: Long,
       failed: Boolean): Record = {
+    val plan = qe.executedPlan
     val ns = nodes(plan)
     Record(name, durationNs,
       exchanges = ns.count(_.isInstanceOf[Exchange]),
@@ -66,7 +74,8 @@ object PlanHealth {
         case _ => false
       },
       interpreted = codegenFallbacks(plan).distinct.sorted,
-      failed = failed)
+      failed = failed,
+      phases = qe.tracker.phases.map { case (k, p) => k -> p.durationMs })
   }
 
   final class Listener extends QueryExecutionListener {
@@ -74,22 +83,104 @@ object PlanHealth {
 
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
       records.synchronized {
-        records += summarize(funcName, qe.executedPlan, durationNs, failed = false)
+        records += summarize(funcName, qe, durationNs, failed = false)
       }
 
     override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
-      records.synchronized { records += summarize(funcName, qe.executedPlan, 0L, failed = true) }
+      records.synchronized { records += summarize(funcName, qe, 0L, failed = true) }
   }
 
-  /** attach a fresh listener to the session and return it */
-  def attach(spark: SparkSession): Listener = {
-    val l = new Listener
-    spark.listenerManager.register(l)
-    l
+  /** What the jobs of one traced block did: its wall; its jobs, each
+    * named by its stages; the stages and tasks they ran; the tasks'
+    * summed run and CPU time, shuffle bytes and disk spill; the largest
+    * peak execution memory of one task; and the plan summary, with its
+    * planning phases, of each SQL execution the session finished while
+    * the block ran. */
+  final case class Layer(wallNs: Long = 0L, jobNames: Vector[String] = Vector.empty,
+      stages: Int = 0, tasks: Int = 0, runMs: Long = 0L, cpuNs: Long = 0L,
+      shuffleReadBytes: Long = 0L, shuffleWriteBytes: Long = 0L, spillBytes: Long = 0L,
+      peakExecMemBytes: Long = 0L, plans: Vector[Record] = Vector.empty) {
+    def jobs: Int = jobNames.size
+
+    /** the layer as named counts: the fields of Bench's `layers` and of
+      * TimeQuery's lines */
+    def fields: Seq[(String, Long)] = Seq(
+      "wall_ms" -> wallNs / 1000000, "jobs" -> jobs.toLong, "stages" -> stages.toLong,
+      "tasks" -> tasks.toLong, "task_run_ms" -> runMs, "task_cpu_ms" -> cpuNs / 1000000,
+      "shuffle_read_bytes" -> shuffleReadBytes, "shuffle_write_bytes" -> shuffleWriteBytes,
+      "spill_bytes" -> spillBytes, "peak_exec_mem_bytes" -> peakExecMemBytes,
+      "exchanges" -> plans.map(_.exchanges.toLong).sum,
+      "broadcasts" -> plans.map(_.broadcasts.toLong).sum) ++
+      Seq("analysis", "optimization", "planning").map(ph =>
+        s"${ph}_ms" -> plans.map(_.phases.getOrElse(ph, 0L)).sum)
   }
 
-  def detach(spark: SparkSession, l: Listener): Unit =
-    spark.listenerManager.unregister(l)
+  private val TagKey = "graft.trace.tag"
+  private val tags = new java.util.concurrent.atomic.AtomicLong
+
+  /** The trace's one listener. Every job submitted while the local
+    * property [[TagKey]] holds `tag` is this block's; Spark copies local
+    * properties to the broadcast and subquery threads a job starts
+    * from. Events arrive on the listener bus's one thread. */
+  private final class Trace(val tag: String, stageRow: String => Unit) extends SparkListener {
+    @volatile var layer = Layer()
+    private val stages = mutable.Set.empty[Int]
+    private def ours(p: java.util.Properties): Boolean =
+      p != null && p.getProperty(TagKey) == tag
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = if (ours(e.properties))
+      layer = layer.copy(jobNames = layer.jobNames :+ e.stageInfos.map(_.name).mkString(" ~ ").take(200))
+
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      if (ours(e.properties)) stages += e.stageInfo.stageId
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = if (stages(e.stageId)) {
+      val l = layer.copy(tasks = layer.tasks + 1)
+      // a failed task may carry no metrics
+      layer = Option(e.taskMetrics).fold(l)(m => l.copy(runMs = l.runMs + m.executorRunTime,
+        cpuNs = l.cpuNs + m.executorCpuTime,
+        shuffleReadBytes = l.shuffleReadBytes + m.shuffleReadMetrics.totalBytesRead,
+        shuffleWriteBytes = l.shuffleWriteBytes + m.shuffleWriteMetrics.bytesWritten,
+        spillBytes = l.spillBytes + m.diskBytesSpilled,
+        peakExecMemBytes = l.peakExecMemBytes max m.peakExecutionMemory))
+    }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val si = e.stageInfo
+      if (stages.remove(si.stageId)) {
+        layer = layer.copy(stages = layer.stages + 1)
+        val m = si.taskMetrics
+        stageRow(s"stage ${si.stageId} tasks=${si.numTasks} input_rows=${m.inputMetrics.recordsRead} " +
+          s"shuffle_read_rows=${m.shuffleReadMetrics.recordsRead} shuffle_write_rows=" +
+          s"${m.shuffleWriteMetrics.recordsWritten} shuffle_write_bytes=${m.shuffleWriteMetrics.bytesWritten} " +
+          s"spill_bytes=${m.diskBytesSpilled} peak_exec_mem_bytes=${m.peakExecutionMemory} ${si.name.take(90)}")
+      }
+    }
+  }
+
+  /** Runs `body` under the engine's query trace and returns its result
+    * and its [[Layer]]. `stageRow` gets one line per completed stage of
+    * the block, as the stage completes, so a crashed run still leaves
+    * its prefix. Plans come from a [[Listener]] attached to `spark` for
+    * the block. The bus is drained before the block and again before the
+    * layer is read, both outside the block's wall. */
+  def traced[A](spark: SparkSession, stageRow: String => Unit = _ => ())(body: => A): (A, Layer) = {
+    val sc = spark.sparkContext
+    val trace = new Trace(s"trace-${tags.incrementAndGet()}", stageRow)
+    val plans = new Listener
+    BusBridge.drain(sc) // no earlier execution's end reaches `plans`
+    spark.listenerManager.register(plans)
+    sc.addSparkListener(trace)
+    try {
+      val prev = sc.getLocalProperty(TagKey)
+      sc.setLocalProperty(TagKey, trace.tag)
+      val t0 = System.nanoTime()
+      val a = try body finally sc.setLocalProperty(TagKey, prev)
+      val wall = System.nanoTime() - t0
+      BusBridge.drain(sc)
+      (a, trace.layer.copy(wallNs = wall, plans = plans.records.synchronized(plans.records.toVector)))
+    } finally { sc.removeSparkListener(trace); spark.listenerManager.unregister(plans) }
+  }
 
   /** Runtime operator metrics — the SQLMetrics half of the reference's
     * per-operator metrics UI: after a query executes, every physical
@@ -120,15 +211,5 @@ object PlanHealth {
       "shuffle_records_written" -> sumOf(_ == "shuffleRecordsWritten"),
       "shuffle_bytes_written" -> sumOf(_ == "shuffleBytesWritten"),
       "spill_bytes" -> sumOf(_ == "spillSize"))
-  }
-
-  /** one-line textual report per record */
-  def report(l: Listener): Seq[String] = l.records.synchronized {
-    l.records.map { r =>
-      f"${r.name}%-12s ${r.durationNs / 1e6}%9.1f ms exch=${r.exchanges} bcast=${r.broadcasts} " +
-        f"codegen=${r.codegenSpans} scans=${r.scans} pushed=${r.scansWithPushedFilters}" +
-        (if (r.interpreted.isEmpty) "" else s" interpreted=${r.interpreted.mkString(",")}") +
-        (if (r.failed) " FAILED" else "")
-    }.toSeq
   }
 }

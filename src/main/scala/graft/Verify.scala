@@ -22,13 +22,9 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_SQL_CONF=k=v[,k=v...]: session-conf overrides for
     // mode-matrix passes (e.g. spark.sql.ansi.enabled=false re-runs the
-    // whole battery under non-ANSI semantics). Pairs split on a comma
-    // only when what follows looks like another key=value — a comma
-    // INSIDE a value (e.g. a class list for spark.sql.extensions) stays
-    // part of that value.
-    sys.env.get("SPARK_GRAFT_SQL_CONF").foreach(
-      _.split(",(?=[^=,]+=)").filter(_.contains('='))
-        .foreach { kv => val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) })
+    // whole battery under non-ANSI semantics)
+    sys.env.get("SPARK_GRAFT_SQL_CONF").foreach(GraftSession.confOverrides(_)
+      .foreach { case (k, v) => spark.conf.set(k, v) })
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -381,6 +381,15 @@ object GraphOps {
     * fits the bound or reaches the fixpoint. Oracle: DuckDB
     * recursive-CTE transitive closure over the identical edge list. */
   private val connectedComponents: Q = (s, dir) => {
+    val (pairs, users) = componentPairs(s, dir)
+    DedupOps.propagateMinLabels(pairs, users)
+      .groupBy(col("label").as("component_rep"))
+      .agg(count(lit(1)).as("n_users"), max(col("doc_id")).as("max_user"))
+      .orderBy(col("component_rep"))
+  }
+
+  /** graph_connected_components' distinct `(doc_a, doc_b)` edges and `doc_id` nodes */
+  private[graft] def componentPairs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("k"), col("hr")).orderBy(col("user_id"))
     val buckets = load(s, dir, "events")
@@ -401,10 +410,7 @@ object GraphOps {
     // callers feed distinct pairs by construction); this caller's
     // lag-derived pairs repeat per (key, hour) bucket, so dedupe here —
     // the volume is bucket-bounded, far below the LSH pair scale
-    DedupOps.propagateMinLabels(pairs.distinct(), users)
-      .groupBy(col("label").as("component_rep"))
-      .agg(count(lit(1)).as("n_users"), max(col("doc_id")).as("max_user"))
-      .orderBy(col("component_rep"))
+    (pairs.distinct(), users)
   }
 
   private val connectedComponentsSql =

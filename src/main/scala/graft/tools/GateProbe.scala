@@ -10,9 +10,8 @@ object GateProbe {
     spark.sparkContext.setLogLevel("ERROR")
     // same mode-matrix override Verify honors, so big-SF gate probes can
     // run under the documented exact-banding protocol
-    sys.env.get("SPARK_GRAFT_SQL_CONF").foreach(
-      _.split(",(?=[^=,]+=)").filter(_.contains('='))
-        .foreach { kv => val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) })
+    sys.env.get("SPARK_GRAFT_SQL_CONF").foreach(graft.GraftSession.confOverrides(_)
+      .foreach { case (k, v) => spark.conf.set(k, v) })
     val gates = QualityGates.measure(spark, args(0))
     gates.foreach(g => println(
       f"${g.query}%-22s ${g.metric}%-34s ${g.value}%.4f (bound ${g.bound}%.2f) ${if (g.pass) "ok" else "FAIL"}"))

@@ -16,9 +16,8 @@ object ScaleGateProbe {
     val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    sys.env.get("SPARK_GRAFT_SQL_CONF").foreach(
-      _.split(",(?=[^=,]+=)").filter(_.contains('='))
-        .foreach { kv => val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) })
+    sys.env.get("SPARK_GRAFT_SQL_CONF").foreach(graft.GraftSession.confOverrides(_)
+      .foreach { case (k, v) => spark.conf.set(k, v) })
     val gates = QualityGates.measureAtScale(spark, bigDir, refDir)
     gates.foreach(g => println(
       f"${g.query}%-24s ${g.metric}%-36s ${g.value}%.4f (bound ${g.bound}%.2f) ${if (g.pass) "ok" else "FAIL"}"))

@@ -53,7 +53,7 @@ class BenchSpec extends AnyFunSuite {
   }
 
   test("the full artifact lists the omitted names: the set minus the kept names") {
-    val full = parse(Bench.fullArtifact(run(_ => 0.5), kept, Nil, Nil))
+    val full = parse(Bench.fullArtifact(run(_ => 0.5), kept, Nil, Map()))
     val omitted = Seq.newBuilder[String]
     full.get("stdout_omitted").forEach(n => omitted += n.asText())
     assert(omitted.result() === names.filterNot(kept.toSet))
@@ -73,6 +73,28 @@ class BenchSpec extends AnyFunSuite {
     val line = parse(Bench.stdoutLine(r, Bench.stdoutKept("full", sf, detail, names)))
     assert(line.get("detail").asText() === "run_a.json")
     assert(parse(Bench.compactArtifact(r)).get("detail").asText() === "run_a.json")
+  }
+
+  test("the full artifact writes the layers it is given, per engine, and no telemetry") {
+    val built = PlanHealth.Layer(wallNs = 700000000L, jobNames = Vector("a", "b"), tasks = 8)
+    val ran = PlanHealth.Layer(wallNs = 300000000L, stages = 2, spillBytes = 42L)
+    val q = names.head
+    val full = parse(Bench.fullArtifact(run(_ => 1.0), kept, Nil,
+      Map("graft" -> Map(q -> (built, ran)), "vanilla" -> Map(q -> (ran, built)))))
+    assert(!full.has("telemetry"))
+    val g = full.get("layers").get("graft")
+    assert(g.size() === 1)
+    assert(g.get(q).get("construction").get("jobs").asLong() === 2L)
+    assert(g.get(q).get("construction").get("wall_ms").asLong() === 700L)
+    assert(g.get(q).get("execution").get("spill_bytes").asLong() === 42L)
+    assert(full.get("layers").get("vanilla").get(q).get("execution").get("tasks").asLong() === 8L)
+    assert(Bench.wall((built, ran)) === 1.0)
+  }
+
+  test("a conf override keeps a comma inside its value") {
+    assert(GraftSession.confOverrides(
+      "spark.sql.optimizer.excludedRules=a.B,c.D,spark.sql.ansi.enabled=false") ===
+      Seq("spark.sql.optimizer.excludedRules" -> "a.B,c.D", "spark.sql.ansi.enabled" -> "false"))
   }
 
   test("an unstable graft plan is reported as unstable-plan and bisects no conf") {

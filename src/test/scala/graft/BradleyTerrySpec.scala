@@ -58,12 +58,12 @@ class BradleyTerrySpec extends AnyFunSuite {
     spark.catalog.clearCache()
     // warm Tables' per-JVM schema memo: a first load pays a footer job
     Tables.load(spark, dir, "events").schema
-    val (df, built) = JobCounter(spark) {
+    val (df, built) = PlanHealth.traced(spark) {
       SparkEntry.queries("ev_pref_bradley_terry")(spark, dir)
     }
-    assert(built.size == 4, built.mkString("\n"))
-    val (rows, ran) = JobCounter(spark) { df.collect() }
+    assert(built.jobs == 4, built.jobNames.mkString("\n"))
+    val (rows, ran) = PlanHealth.traced(spark) { df.collect() }
     assert(rows.nonEmpty)
-    assert(ran.size == 3, ran.mkString("\n"))
+    assert(ran.jobs == 3, ran.jobNames.mkString("\n"))
   }
 }

@@ -33,37 +33,47 @@ class EngineSurfaceSpec extends AnyFunSuite {
   }
 
   test("plan-health listener summarizes executed plans") {
-    val l = PlanHealth.attach(spark)
-    try {
+    val (_, layer) = PlanHealth.traced(spark) {
       Tables.load(spark, dir, "orders")
         .groupBy(col("o_orderstatus")).agg(count(lit(1))).collect()
-      // QueryExecutionListener events are delivered asynchronously
-      var tries = 0
-      while (l.records.isEmpty && tries < 50) { Thread.sleep(100); tries += 1 }
-      assert(l.records.nonEmpty)
-      val r = l.records.last
-      assert(r.exchanges >= 1, s"groupBy should shuffle: $r")
-      assert(r.scans >= 1 && !r.failed)
-      assert(PlanHealth.report(l).nonEmpty)
-    } finally PlanHealth.detach(spark, l)
+    }
+    assert(layer.plans.nonEmpty)
+    val r = layer.plans.last
+    assert(r.exchanges >= 1, s"groupBy should shuffle: $r")
+    assert(r.scans >= 1 && !r.failed)
   }
 
   test("plan health names the interpreted expressions: none for a compiled transform") {
-    def interpreted(): Seq[String] = {
-      val l = PlanHealth.attach(spark)
-      try {
-        Tables.load(spark, dir, "orders")
-          .select(transform(array(col("o_totalprice")), x => x * 2).as("t")).collect()
-        var tries = 0
-        while (l.records.isEmpty && tries < 50) { Thread.sleep(100); tries += 1 }
-        l.records.last.interpreted
-      } finally PlanHealth.detach(spark, l)
-    }
+    def interpreted(): Seq[String] = PlanHealth.traced(spark) {
+      Tables.load(spark, dir, "orders")
+        .select(transform(array(col("o_totalprice")), x => x * 2).as("t")).collect()
+    }._2.plans.last.interpreted
     assert(interpreted().isEmpty)
     // Spark's own lambdas, with the rule excluded
     spark.conf.set("spark.sql.optimizer.excludedRules", "graft.functions.CompiledLambdas")
     try assert(interpreted().contains("ArrayTransform"))
     finally spark.conf.unset("spark.sql.optimizer.excludedRules")
+  }
+
+  test("the query trace counts jobs of broadcast and subquery threads toward its block") {
+    // AQE off: the broadcast (one stage) and the scalar subquery (two)
+    // each run one job, submitted from their own thread pools, before
+    // the collect's one-stage job;
+    // the trace sees those two only because Spark copies the block's
+    // local properties to those threads
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val (rows, layer) = PlanHealth.traced(spark) {
+        spark.sql("SELECT /*+ BROADCAST(b) */ a.id FROM range(1000) a JOIN range(10) b " +
+          "ON a.id = b.id WHERE a.id < (SELECT max(id) FROM range(5))").collect()
+      }
+      assert(rows.length == 4)
+      assert(layer.jobs == 3, layer.jobNames.mkString("\n"))
+      assert(layer.stages == 4 && layer.tasks > 0 && layer.wallNs > 0, layer)
+      // the collect's SQL execution, with its plan summary and phases
+      assert(layer.plans.map(_.broadcasts).sum == 1, layer.plans)
+      assert(layer.plans.forall(_.phases.contains("planning")), layer.plans)
+    } finally spark.conf.unset("spark.sql.adaptive.enabled")
   }
 
   test("runtime SQLMetrics surface actual rows and shuffle volume per operator") {

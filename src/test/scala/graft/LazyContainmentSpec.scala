@@ -18,7 +18,7 @@ class LazyContainmentSpec extends AnyFunSuite {
     // execution); after the memo, loads are job-free — which is what
     // makes a zero-jobs construction achievable at all
     Tables.load(spark, GraftSparkSession.sfDir, "documents").schema
-    val (df, jobsDuringBuild) = JobCounter(spark) {
+    val (df, jobsDuringBuild) = PlanHealth.traced(spark) {
       val q = operators.DedupOps.queries("dedup_containment")
       val df = q(spark, GraftSparkSession.sfDir)
       // a formatted explain plans the query (incl. physical planning)
@@ -27,15 +27,15 @@ class LazyContainmentSpec extends AnyFunSuite {
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       df
     }
-    assert(jobsDuringBuild.isEmpty,
-      s"containment construction/explain submitted ${jobsDuringBuild.size} jobs " +
-        s"(${jobsDuringBuild.mkString("; ")}); must be lazy")
+    assert(jobsDuringBuild.jobs == 0,
+      s"containment construction/explain submitted ${jobsDuringBuild.jobs} jobs " +
+        s"(${jobsDuringBuild.jobNames.mkString("; ")}); must be lazy")
 
     // first action executes the pipeline — and produces the same
     // survivors the oracle checks (non-empty at sf0.001)
-    val (n, jobsDuringAction) = JobCounter(spark) { df.count() }
+    val (n, jobsDuringAction) = PlanHealth.traced(spark) { df.count() }
     assert(n > 0)
-    assert(jobsDuringAction.nonEmpty)
+    assert(jobsDuringAction.jobs > 0)
     operators.DedupOps.releaseCaches()
   }
 
@@ -80,13 +80,13 @@ class LazyContainmentSpec extends AnyFunSuite {
     spark.catalog.clearCache()
     val q = operators.DedupOps.queries("dedup_containment")
     val df = q(spark, GraftSparkSession.sfDir)
-    val (_, jobsFirst) = JobCounter(spark) { df.count() }
+    val (_, jobsFirst) = PlanHealth.traced(spark) { df.count() }
     // the survivors cache is populated now; a re-action on the same
     // DataFrame must not re-run the verify pipeline (dramatically
     // fewer jobs — the sort + scan of cached batches only)
-    val (_, jobsSecond) = JobCounter(spark) { df.count() }
-    assert(jobsSecond.size < jobsFirst.size,
-      s"second action ran ${jobsSecond.size} jobs vs first ${jobsFirst.size} — cache not reused")
+    val (_, jobsSecond) = PlanHealth.traced(spark) { df.count() }
+    assert(jobsSecond.jobs < jobsFirst.jobs,
+      s"second action ran ${jobsSecond.jobs} jobs vs first ${jobsFirst.jobs} — cache not reused")
     operators.DedupOps.releaseCaches()
   }
 }

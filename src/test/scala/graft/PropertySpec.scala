@@ -270,11 +270,11 @@ class PropertySpec extends AnyFunSuite {
       val mid = edges.map { case (a, b) => (a max b, a min b) }.filter(e => e._1 != e._2)
         .distinct.size.toLong
       def labels(bound: Long): (Map[Long, Long], Int) = {
-        val (got, jobs) = JobCounter(spark) {
+        val (got, jobs) = PlanHealth.traced(spark) {
           operators.DedupOps.propagateMinLabels(pairs, docs, localFinishMaxEdges = bound)
             .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         }
-        (got, jobs.size)
+        (got, jobs.jobs)
       }
       // star rounds only; the driver finish at once; the finish after
       // some rounds, which runs more jobs than the first and fewer than

@@ -132,7 +132,7 @@ class ScaleFeaturesSpec extends AnyFunSuite {
       .toDF("doc_a", "doc_b").localCheckpoint()
     val docs = (0 until n).map(_.toLong).toDF("doc_id")
     // star rounds forced: a bound of 0 edges never finishes on the driver
-    val (labels, jobs) = JobCounter(spark) {
+    val (labels, jobs) = PlanHealth.traced(spark) {
       operators.DedupOps.propagateMinLabels(pairs, docs, localFinishMaxEdges = 0L)
     }
     // one materialization per round, pinned: the first checkpoint's
@@ -141,15 +141,15 @@ class ScaleFeaturesSpec extends AnyFunSuite {
     // the round's checkpoint) plus 2 for the except gate, which runs
     // every round here because a path's edge count never changes.
     // Labeling the docs afterwards is lazy.
-    assert(jobs.size == 1 + 5 * (4 + 2), jobs.mkString("\n"))
+    assert(jobs.jobs == 1 + 5 * (4 + 2), jobs.jobNames.mkString("\n"))
     val planLen = labels.queryExecution.optimizedPlan.toString.length
     assert(planLen < 10000, s"plan string grew to $planLen chars — lineage not truncated")
     // the default bound finishes the same path on the driver at once:
     // the first checkpoint's count, then one collect of its ids
-    val (finished, finishJobs) = JobCounter(spark) {
+    val (finished, finishJobs) = PlanHealth.traced(spark) {
       operators.DedupOps.propagateMinLabels(pairs, docs)
     }
-    assert(finishJobs.size == 2, finishJobs.mkString("\n"))
+    assert(finishJobs.jobs == 2, finishJobs.jobNames.mkString("\n"))
     for (out <- Seq(labels.collect(), finished.collect()))
       assert(out.length == n && out.forall(_.getLong(1) == 0L),
         "every node in the path must adopt label 0")
