@@ -23,6 +23,16 @@ import org.apache.spark.sql.types.DateType
   * `array_sort` comparators and lambdas whose body holds an interpreted
   * expression stay Spark's interpreted functions.
   *
+  * Planner strategies: [[graft.plans.AsOfJoinStrategy]],
+  * [[graft.plans.DeferredMaterializeStrategy]], and
+  * [[graft.plans.SmallLocalRebalance]], which plans the rebalance over a
+  * driver-local relation within AQE's one-partition bound (1 MiB by
+  * default; a small lake append) as one partition with no shuffle.
+  * Query-stage preparation rules:
+  * [[graft.plans.MergeTwoPhaseAggregate]] and
+  * [[graft.plans.SkipPartialAggregate]]; post-planner rule:
+  * [[graft.plans.RewriteJoinBuildSide]].
+  *
   * Activate with `spark.sql.extensions=graft.GraftExtensions` or
   * through [[GraftSession.builder]].
   */
@@ -118,6 +128,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => graft.functions.CompiledLambdas)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     ext.injectPlannerStrategy(_ => graft.plans.DeferredMaterializeStrategy)
+    ext.injectPlannerStrategy(_ => graft.plans.SmallLocalRebalance)
     ext.injectQueryStagePrepRule(graft.plans.MergeTwoPhaseAggregate.apply)
     ext.injectQueryStagePrepRule(graft.plans.SkipPartialAggregate.apply)
     // before EnsureRequirements: SMJ→SHJ rewrite leaves no orphaned sorts

@@ -2,8 +2,8 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted,
-  SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerStageSubmitted, SparkListenerTaskEnd, StageInfo}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -90,13 +90,15 @@ object PlanHealth {
       records.synchronized { records += summarize(funcName, qe, 0L, failed = true) }
   }
 
-  /** What the jobs of one traced block did: its wall; its jobs, each
-    * named by its stages; the stages and tasks they ran; the tasks'
-    * summed run and CPU time, shuffle bytes and disk spill; the largest
-    * peak execution memory of one task; and the plan summary, with its
+  /** What the jobs of one traced block did: its wall, and the part of
+    * it that no job of the block covers (driver-only time: building,
+    * planning, committing, waiting); its jobs, each named by its stages
+    * ([[stageName]]); the stages and tasks they ran; the tasks' summed
+    * run and CPU time, shuffle bytes and disk spill; the largest peak
+    * execution memory of one task; and the plan summary, with its
     * planning phases, of each SQL execution the session finished while
     * the block ran. */
-  final case class Layer(wallNs: Long = 0L, jobNames: Vector[String] = Vector.empty,
+  final case class Layer(wallNs: Long = 0L, noJobMs: Long = 0L, jobNames: Vector[String] = Vector.empty,
       stages: Int = 0, tasks: Int = 0, runMs: Long = 0L, cpuNs: Long = 0L,
       shuffleReadBytes: Long = 0L, shuffleWriteBytes: Long = 0L, spillBytes: Long = 0L,
       peakExecMemBytes: Long = 0L, plans: Vector[Record] = Vector.empty) {
@@ -105,7 +107,8 @@ object PlanHealth {
     /** the layer as named counts: the fields of Bench's `layers` and of
       * TimeQuery's lines */
     def fields: Seq[(String, Long)] = Seq(
-      "wall_ms" -> wallNs / 1000000, "jobs" -> jobs.toLong, "stages" -> stages.toLong,
+      "wall_ms" -> wallNs / 1000000, "no_job_ms" -> noJobMs, "jobs" -> jobs.toLong,
+      "stages" -> stages.toLong,
       "tasks" -> tasks.toLong, "task_run_ms" -> runMs, "task_cpu_ms" -> cpuNs / 1000000,
       "shuffle_read_bytes" -> shuffleReadBytes, "shuffle_write_bytes" -> shuffleWriteBytes,
       "spill_bytes" -> spillBytes, "peak_exec_mem_bytes" -> peakExecMemBytes,
@@ -118,6 +121,30 @@ object PlanHealth {
   private val TagKey = "graft.trace.tag"
   private val tags = new java.util.concurrent.atomic.AtomicLong
 
+  /** A stage by what ran in it: the RDD operation scopes of its RDDs,
+    * oldest RDD first (for SQL, the physical operators that built them:
+    * `Exchange`, `WholeStageCodegen (2)`, `AppendData`), or its call
+    * site when it has none. Jobs that AQE and broadcasts submit from
+    * Spark's thread pools all share one call site, so the scopes are
+    * what tell their stages apart. */
+  def stageName(si: StageInfo): String = {
+    val scopes = BusBridge.scopes(si)
+    if (scopes.isEmpty) si.name else scopes.mkString(", ")
+  }
+
+  /** Milliseconds of `[from, to]` that none of `spans` (start, end)
+    * covers. */
+  private[graft] def uncovered(from: Long, to: Long, spans: Seq[(Long, Long)]): Long = {
+    var covered = 0L
+    var reach = from
+    for ((s, e) <- spans.sortBy(_._1)) {
+      val lo = s max reach
+      val hi = e min to
+      if (hi > lo) { covered += hi - lo; reach = hi }
+    }
+    (to - from - covered) max 0L
+  }
+
   /** The trace's one listener. Every job submitted while the local
     * property [[TagKey]] holds `tag` is this block's; Spark copies local
     * properties to the broadcast and subquery threads a job starts
@@ -125,11 +152,18 @@ object PlanHealth {
   private final class Trace(val tag: String, stageRow: String => Unit) extends SparkListener {
     @volatile var layer = Layer()
     private val stages = mutable.Set.empty[Int]
+    /** each job's (start, end) epoch ms; a job still running has no end */
+    val jobSpans = mutable.Map.empty[Int, (Long, Option[Long])]
     private def ours(p: java.util.Properties): Boolean =
       p != null && p.getProperty(TagKey) == tag
 
-    override def onJobStart(e: SparkListenerJobStart): Unit = if (ours(e.properties))
-      layer = layer.copy(jobNames = layer.jobNames :+ e.stageInfos.map(_.name).mkString(" ~ ").take(200))
+    override def onJobStart(e: SparkListenerJobStart): Unit = if (ours(e.properties)) {
+      jobSpans(e.jobId) = (e.time, None)
+      layer = layer.copy(jobNames = layer.jobNames :+ e.stageInfos.map(stageName).mkString(" ~ ").take(200))
+    }
+
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      jobSpans.get(e.jobId).foreach { case (s, _) => jobSpans(e.jobId) = (s, Some(e.time)) }
 
     override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
       if (ours(e.properties)) stages += e.stageInfo.stageId
@@ -153,7 +187,7 @@ object PlanHealth {
         stageRow(s"stage ${si.stageId} tasks=${si.numTasks} input_rows=${m.inputMetrics.recordsRead} " +
           s"shuffle_read_rows=${m.shuffleReadMetrics.recordsRead} shuffle_write_rows=" +
           s"${m.shuffleWriteMetrics.recordsWritten} shuffle_write_bytes=${m.shuffleWriteMetrics.bytesWritten} " +
-          s"spill_bytes=${m.diskBytesSpilled} peak_exec_mem_bytes=${m.peakExecutionMemory} ${si.name.take(90)}")
+          s"spill_bytes=${m.diskBytesSpilled} peak_exec_mem_bytes=${m.peakExecutionMemory} ${stageName(si).take(160)}")
       }
     }
   }
@@ -174,11 +208,13 @@ object PlanHealth {
     try {
       val prev = sc.getLocalProperty(TagKey)
       sc.setLocalProperty(TagKey, trace.tag)
-      val t0 = System.nanoTime()
+      val (t0, from) = (System.nanoTime(), System.currentTimeMillis())
       val a = try body finally sc.setLocalProperty(TagKey, prev)
-      val wall = System.nanoTime() - t0
+      val (wall, to) = (System.nanoTime() - t0, System.currentTimeMillis())
       BusBridge.drain(sc)
-      (a, trace.layer.copy(wallNs = wall, plans = plans.records.synchronized(plans.records.toVector)))
+      val noJob = uncovered(from, to, trace.jobSpans.values.map { case (s, e) => (s, e.getOrElse(to)) }.toSeq)
+      (a, trace.layer.copy(wallNs = wall, noJobMs = noJob,
+        plans = plans.records.synchronized(plans.records.toVector)))
     } finally { sc.removeSparkListener(trace); spark.listenerManager.unregister(plans) }
   }
 

@@ -9,10 +9,12 @@ package graft
   *
   * Each rep prints its construction (building the DataFrame) apart from
   * its execution (the noop write), each as the [[PlanHealth.Layer]]
-  * fields: wall, jobs, stages, tasks, summed task run and CPU time,
-  * shuffle and spill bytes, peak task memory, plan exchanges and the
-  * planning phases. Before that, one `[stage]` row per stage streams out
-  * as the stage completes, so a crashed run still leaves its prefix.
+  * fields: wall, the part of it no job covers (`no_job_ms`), jobs,
+  * stages, tasks, summed task run and CPU time, shuffle and spill bytes,
+  * peak task memory, plan exchanges and the planning phases. Before
+  * that, one `[stage]` row per stage streams out as the stage completes,
+  * named by its operators ([[PlanHealth.stageName]]), so a crashed run
+  * still leaves its prefix.
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {

@@ -19,14 +19,17 @@ import org.apache.spark.sql.types.LongType
   * predicate prunes ~(selA × selB) of the files instead of ~selA.
   *
   * Scale design:
-  *  - the only driver-side work is a single min/max aggregate (at
-  *    100 TB this is a catalog column-stats lookup, not a scan);
+  *  - the driver-side work is a single min/max aggregate (at 100 TB
+  *    this is a catalog column-stats lookup, not a scan) and at most
+  *    65536 row counts, one per cell of the curve's top 16 bits;
   *  - rank normalization + bit interleaving are composed entirely from
   *    codegen'd built-ins (`shiftleft`/`bitwiseOR`/`bitwiseAND`) — the
   *    whole key stays inside WholeStageCodegen, no UDF;
-  *  - `repartitionByRange` samples the key distribution, so skewed
-  *    dimensions still yield evenly-sized files (the small-files and
-  *    giant-file defences in one);
+  *  - the file bounds split those exact cell counts into runs of about
+  *    equal rows, so skewed dimensions still yield evenly-sized files
+  *    (the small-files and giant-file defences in one), and the same
+  *    data always gets the same files: no sample, whose seed would
+  *    change with the RDD id, decides them;
   *  - within-partition sort by the key tightens row-group locality for
   *    formats whose readers skip at finer grain than whole files.
   */
@@ -56,19 +59,40 @@ object ZOrder {
     else least(lit(65535L),
       floor((c.cast("double") - lit(mn)) / lit(mx - mn) * lit(65536.0)).cast(LongType))
 
-  /** cluster `df` on the Z-curve over (a, b) into `numFiles` range
-    * partitions; the returned frame writes one tightly-boxed file per
-    * partition through any sink that preserves input partitioning */
+  /** cluster `df` on the Z-curve over (a, b) into `numFiles` partitions
+    * of contiguous curve cells; the returned frame writes one
+    * tightly-boxed file per partition through any sink that preserves
+    * input partitioning */
   def cluster(df: DataFrame, a: String, b: String, numFiles: Int): DataFrame = {
     val r = df.agg(min(col(a).cast("double")), max(col(a).cast("double")),
       min(col(b).cast("double")), max(col(b).cast("double"))).head()
     if (r.isNullAt(0) || r.isNullAt(2)) return df // empty/all-null input: nothing to cluster
-    val key = interleave16(
+    val keyed = df.withColumn("__zkey", interleave16(
       rank16(col(a), r.getDouble(0), r.getDouble(1)),
-      rank16(col(b), r.getDouble(2), r.getDouble(3)))
-    df.withColumn("__zkey", key)
-      .repartitionByRange(numFiles, col("__zkey"))
+      rank16(col(b), r.getDouble(2), r.getDouble(3))))
+    val cell = shiftRightUnsigned(col("__zkey"), 16)
+    // rows with a null coordinate have no cell and go to partition 0
+    val counts = keyed.groupBy(cell).count().collect()
+      .collect { case c if !c.isNullAt(0) => c.getLong(0) -> c.getLong(1) }
+    val part = cuts(counts.toSeq, numFiles)
+      .map(c => when(cell >= c, 1).otherwise(0)).foldLeft(lit(0))(_ + _)
+    keyed.repartitionById(numFiles, part)
       .sortWithinPartitions("__zkey")
       .drop("__zkey")
+  }
+
+  /** The first cell of each partition after the first, given the row
+    * count of every non-empty cell: a cell goes to partition
+    * ⌊rows in earlier cells × n / all rows⌋, so partition `k` starts
+    * at the first cell whose partition is at least `k`. A partition no
+    * cell reaches has no cut, and a cell heavier than a partition's
+    * share leaves the partitions it spans empty. */
+  private[graft] def cuts(counts: Seq[(Long, Long)], n: Int): Seq[Long] = {
+    val total = counts.map(_._2).sum
+    val sorted = counts.sortBy(_._1)
+    val partOf = sorted.map(_._2).scanLeft(0L)(_ + _)
+      .map(before => math.min(n - 1L, before * n / total).toInt)
+    val starts = sorted.map(_._1).zip(partOf)
+    (1 until n).flatMap(k => starts.collectFirst { case (c, p) if p >= k => c })
   }
 }

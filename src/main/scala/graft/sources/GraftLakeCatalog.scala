@@ -173,13 +173,14 @@ class GraftLakeCatalog extends TableCatalog with ProcedureCatalog with FunctionC
     val ids = snap.fieldIds
     val types: IndexedSeq[DataType] = sch.fields.map(_.dataType).toIndexedSeq
     val bundle = LakeFileStore.writerBundle(ids, types)
+    val context = LakeFileStore.taskContext(bundle)
     // On any mid-merge failure, abort every file opened so far (finished
     // ones included — they are uncommitted until st.replace) so no open
     // writers or orphaned half-written parquet files linger until exit.
     val opened = scala.collection.mutable.ArrayBuffer.empty[LakeOpenFile]
     val merged = try {
       snap.files.groupBy(_.partition).map { case (part, fs) =>
-        val out = new LakeOpenFile(bundle, part, ids, types)
+        val out = new LakeOpenFile(bundle, context, part, ids, types)
         opened += out
         fs.foreach { f =>
           // re-layout each file's rows into the current schema by field id
@@ -749,8 +750,12 @@ class GraftLakeTable(state: LakeTableState, pinned: Option[LakeSnapshot],
           * Iceberg write.distribution-mode=hash default): all rows of a
           * partition value land in ONE task, so a write produces one
           * data file per partition value instead of tasks×values small
-          * files — the at-scale small-files defence. Non-strict: Spark
-          * may skip the shuffle when the input is already clustered. */
+          * files — the at-scale small-files defence. Non-strict, so
+          * Spark plans it as a rebalance: a shuffle whose partitions AQE
+          * may coalesce, skipped when the input is already clustered.
+          * A driver-local input of at most 1 MiB (a small append) runs
+          * as one task with no shuffle ([[graft.plans.SmallLocalRebalance]]),
+          * which clusters it trivially. */
         override def requiredDistribution()
             : org.apache.spark.sql.connector.distributions.Distribution = {
           import org.apache.spark.sql.connector.distributions.Distributions
@@ -1250,10 +1255,11 @@ class LakeWriterFactory(schema: StructType, fieldIds: IndexedSeq[Int],
       private val proj = UnsafeProjection.create(schema)
       private val types: IndexedSeq[DataType] = schema.fields.map(_.dataType).toIndexedSeq
       private val open = mutable.LinkedHashMap[IndexedSeq[Any], LakeOpenFile]()
+      private lazy val context = LakeFileStore.taskContext(bundle) // one per task
       override def write(record: InternalRow): Unit = {
         val key: IndexedSeq[Any] = partFields.map(_.eval(record))
         open.getOrElseUpdate(key,
-          new LakeOpenFile(bundle, key, fieldIds, types)).add(proj(record))
+          new LakeOpenFile(bundle, context, key, fieldIds, types)).add(proj(record))
       }
       /** metadata-projection write path (row-level rewrites): the data
         * row is already table-schema shaped; re-route by its own

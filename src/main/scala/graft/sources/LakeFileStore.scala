@@ -1,9 +1,13 @@
 package graft.sources
 
 import java.io.File
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermission
 import java.util.UUID
 
-import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType, JobID}
+import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptContext, TaskAttemptID, TaskID, TaskType, JobID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
@@ -35,6 +39,18 @@ import org.apache.spark.util.SerializableConfiguration
   * iterators with column pruning. Files are immutable; rewrites commit
   * new files and old snapshots stay time-travel readable, so physical
   * deletion happens only at JVM exit.
+  *
+  * Writes start no process. Hadoop's `RawLocalFileSystem` sets a file's
+  * mode by forking `chmod` when the JVM has no native libhadoop, once
+  * for each data file and once for its `.crc`. Writers therefore open
+  * their files through [[LakeLocalFileSystem]]: the same checksummed
+  * local filesystem (so every data file keeps its `.crc`, and reads,
+  * which go through the session's own `file:` filesystem, verify it),
+  * whose raw layer sets the same mode through `java.nio` instead. What a
+  * file still costs: one parquet writer (ParquetOutputFormat scans the
+  * whole conf for column settings), one filesystem instance (kept out of
+  * Hadoop's per-scheme cache, so no other `file:` user gets it), and two
+  * files on disk.
   */
 object LakeFileStore {
 
@@ -88,31 +104,27 @@ object LakeFileStore {
     // store-what-you-were-given behavior (proleptic Gregorian on disk).
     job.getConfiguration.set("spark.sql.parquet.datetimeRebaseModeInWrite", "CORRECTED")
     job.getConfiguration.set("spark.sql.parquet.int96RebaseModeInWrite", "CORRECTED")
+    // Hadoop caches one filesystem per scheme for the whole JVM: an
+    // uncached instance keeps the no-fork filesystem to these writers
+    job.getConfiguration.set("fs.file.impl", classOf[LakeLocalFileSystem].getName)
+    job.getConfiguration.setBoolean("fs.file.impl.disable.cache", true)
     val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
     WriterBundle(factory, new SerializableConfiguration(job.getConfiguration),
       warehouseDir.getAbsolutePath, schema.json)
   }
 
-  private def taskAttemptContext(conf: org.apache.hadoop.conf.Configuration): TaskAttemptContextImpl =
-    new TaskAttemptContextImpl(conf,
+  /** The context every file of one writing task opens with. Build it
+    * once per task: each one copies the whole conf into a `JobConf`. */
+  def taskContext(bundle: WriterBundle): TaskAttemptContext =
+    new TaskAttemptContextImpl(bundle.conf.value,
       new TaskAttemptID(new TaskID(new JobID("graft-lake", 0), TaskType.MAP, 0), 0))
-
-  /** task-side (or driver-side for maintenance rewrites): stream rows in
-    * the bundle's schema layout into a fresh parquet file; returns its
-    * absolute path for the manifest entry */
-  def write(bundle: WriterBundle, rows: Iterator[InternalRow]): String = {
-    val (path, writer) = openWriter(bundle)
-    try rows.foreach(writer.write) finally writer.close()
-    path
-  }
 
   /** open a fresh parquet file for incremental writing (path reserved
     * up front for the manifest entry) */
-  def openWriter(bundle: WriterBundle)
+  def openWriter(bundle: WriterBundle, context: TaskAttemptContext)
       : (String, org.apache.spark.sql.execution.datasources.OutputWriter) = {
     val path = new File(bundle.dir, s"${UUID.randomUUID()}.parquet").getAbsolutePath
-    (path, bundle.factory.newInstance(path, bundle.schema,
-      taskAttemptContext(bundle.conf.value)))
+    (path, bundle.factory.newInstance(path, bundle.schema, context))
   }
 
   /** Driver-side: a SERIALIZABLE per-file read function (column-pruned
@@ -146,6 +158,26 @@ object LakeFileStore {
   }
 }
 
+/** Hadoop's checksummed local filesystem over [[LakeRawLocalFileSystem]]:
+  * the filesystem lake writers open their files with. */
+final class LakeLocalFileSystem extends LocalFileSystem(new LakeRawLocalFileSystem)
+
+/** `RawLocalFileSystem` that sets a file's mode through
+  * `Files.setPosixFilePermissions` rather than a forked `chmod`. The mode
+  * is the one Hadoop asks for; only a sticky bit, which `java.nio`
+  * cannot set, still takes Hadoop's own path. */
+final class LakeRawLocalFileSystem extends RawLocalFileSystem {
+  override def setPermission(p: Path, permission: FsPermission): Unit =
+    if (permission.getStickyBit) super.setPermission(p, permission)
+    else {
+      // PosixFilePermission's order, OWNER_READ first, is the mode's bit
+      // order from 0400 down to 0001
+      val mode = permission.toShort.toInt
+      val perms = PosixFilePermission.values.filter(b => (mode >> (8 - b.ordinal) & 1) == 1)
+      Files.setPosixFilePermissions(pathToFile(p).toPath, java.util.Set.of(perms: _*))
+    }
+}
+
 /** One data file mid-write: rows stream straight into the parquet
   * writer (NEVER buffered — a task's memory footprint is the open
   * writers' page buffers, not its input), while per-column (min, max)
@@ -153,10 +185,10 @@ object LakeFileStore {
   * closes the file and returns its manifest entry. Streaming blooms are
   * fixed at the [[LakeBloom]] size cap (8 KB/column) because the row
   * count is unknown until the end. */
-final class LakeOpenFile(bundle: LakeFileStore.WriterBundle,
+final class LakeOpenFile(bundle: LakeFileStore.WriterBundle, context: TaskAttemptContext,
     partition: IndexedSeq[Any], fieldIds: IndexedSeq[Int],
     types: IndexedSeq[DataType]) {
-  private val (path, writer) = LakeFileStore.openWriter(bundle)
+  private val (path, writer) = LakeFileStore.openWriter(bundle, context)
   private var count = 0L
   private val n = types.length
   private val statable: Array[Boolean] = types.map(LakeStats.supported).toArray

@@ -76,6 +76,25 @@ class EngineSurfaceSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.sql.adaptive.enabled")
   }
 
+  test("the query trace names stages by their operators and reports the wall no job covers") {
+    val (_, layer) = PlanHealth.traced(spark) {
+      Thread.sleep(200) // driver-only: no job runs
+      Tables.load(spark, dir, "orders").groupBy(col("o_orderstatus")).agg(count(lit(1))).collect()
+    }
+    // AQE submits the shuffle stage's job from its own thread pool, so
+    // its call site names no operator; the RDD scopes do
+    assert(layer.jobNames.exists(_.contains("Exchange")), layer.jobNames.mkString("\n"))
+    assert(!layer.jobNames.exists(_.contains("CompletableFuture")), layer.jobNames.mkString("\n"))
+    assert(layer.noJobMs >= 190 && layer.noJobMs <= layer.wallNs / 1000000, layer)
+  }
+
+  test("uncovered time counts what no span covers, overlaps and overhangs once") {
+    assert(PlanHealth.uncovered(0L, 100L, Seq((10L, 30L), (20L, 50L), (70L, 200L))) == 30L)
+    assert(PlanHealth.uncovered(0L, 100L, Seq((-5L, 5L))) == 95L)
+    assert(PlanHealth.uncovered(0L, 100L, Nil) == 100L)
+    assert(PlanHealth.uncovered(0L, 100L, Seq((0L, 100L), (40L, 60L))) == 0L)
+  }
+
   test("runtime SQLMetrics surface actual rows and shuffle volume per operator") {
     val df = Tables.load(spark, dir, "orders")
       .groupBy(col("o_orderstatus")).agg(count(lit(1)).as("n"))

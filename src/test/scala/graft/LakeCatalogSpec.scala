@@ -1,6 +1,17 @@
 package graft
 
+import java.io.{File, RandomAccessFile}
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermissions
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.ChecksumException
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Lakehouse-format analog (graft.sources.GraftLakeCatalog): snapshot
@@ -341,9 +352,12 @@ class LakeCatalogSpec extends AnyFunSuite {
   }
 
   test("writes hash-cluster by partition value: one data file per partition per append") {
-    // RequiresDistributionAndOrdering: Spark shuffles incoming rows by
-    // the partition transforms, so a parallel append cannot spray
-    // tasks×values small files (the Iceberg hash distribution mode)
+    // RequiresDistributionAndOrdering: all rows of a partition value are
+    // written by one task (the Iceberg hash distribution mode), so an
+    // append cannot spray tasks×values small files. A parallel input
+    // gets there through Spark's rebalance shuffle; this 100-row
+    // driver-local one runs as a single task with no shuffle
+    // (SmallLocalRebalance; pinned with the write-path tests below)
     val (cat, ident) = catState("pt")
     assert(cat.fileCount(ident) == 10,
       s"one file per region expected, got ${cat.fileCount(ident)}")
@@ -473,6 +487,104 @@ class LakeCatalogSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("diverged"), e.getMessage.take(200))
     assert(spark.table("lake.wap2").count() == 2) // main untouched by the failed publish
+  }
+
+  // ---- the write path: no forked process, integrity, job shape ----
+
+  private def dataFiles(): Set[File] =
+    graft.sources.LakeFileStore.warehouseDir.listFiles().filter(_.getName.endsWith(".parquet")).toSet
+
+  private def partitioned(name: String): Unit =
+    spark.sql(s"CREATE TABLE lake.$name (id BIGINT, p STRING, v DOUBLE) PARTITIONED BY (p)")
+
+  private def rows(from: Int, to: Int): DataFrame = {
+    import spark.implicits._
+    (from to to).map(i => (i.toLong, s"p${i % 5}", i * 1.0)).toDF("id", "p", "v")
+  }
+
+  private def upsert(table: String, src: DataFrame): Unit = {
+    src.createOrReplaceTempView(s"${table}_src")
+    spark.sql(s"""MERGE INTO lake.$table t USING ${table}_src s ON t.id = s.id
+                 |WHEN MATCHED THEN UPDATE SET v = s.v + 1
+                 |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+  }
+
+  test("a lake append and a MERGE start no chmod process") {
+    partitioned("nofork")
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try {
+      rows(1, 200).writeTo("lake.nofork").append()
+      upsert("nofork", rows(150, 250))
+    } finally rec.stop()
+    val dump = Files.createTempFile("lake-writes", ".jfr")
+    try {
+      rec.dump(dump)
+      val chmods = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala
+        .map(_.getString("command")).filter(_.contains("chmod"))
+      assert(chmods.isEmpty, chmods.take(3))
+    } finally { rec.close(); Files.delete(dump) }
+    assert(spark.table("lake.nofork").count() == 250)
+  }
+
+  test("every new data file has its .crc and Hadoop's default file mode") {
+    partitioned("integrity")
+    val before = dataFiles()
+    rows(1, 100).writeTo("lake.integrity").append()
+    upsert("integrity", rows(50, 120))
+    val written = dataFiles() -- before
+    assert(written.size >= 10, written) // 5 appended, 5 rewritten
+    val mode = FsPermission.getFileDefault
+      .applyUMask(FsPermission.getUMask(spark.sessionState.newHadoopConf())).toString
+    for (f <- written) {
+      val crc = new File(f.getParentFile, s".${f.getName}.crc")
+      assert(crc.isFile, s"no checksum file for $f")
+      for (x <- Seq(f, crc))
+        assert(PosixFilePermissions.toString(Files.getPosixFilePermissions(x.toPath)) == mode, x)
+    }
+  }
+
+  test("a flipped byte in a data file fails the next read with a checksum error") {
+    partitioned("crcflip")
+    val before = dataFiles()
+    rows(1, 50).writeTo("lake.crcflip").append()
+    val victim = (dataFiles() -- before).head
+    val raf = new RandomAccessFile(victim, "rw")
+    try { raf.seek(4); val b = raf.read(); raf.seek(4); raf.write(b ^ 0xff) } finally raf.close()
+    val e = intercept[Exception](spark.table("lake.crcflip").collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[ChecksumException]), e)
+  }
+
+  /** the append's trace, and the number of files it wrote per partition value */
+  private def tracedAppend(df: DataFrame, table: String): (PlanHealth.Layer, Map[String, Int]) = {
+    partitioned(table)
+    val (_, layer) = PlanHealth.traced(spark)(df.writeTo(s"lake.$table").append())
+    val perValue = spark.sql(s"SELECT partition FROM lake.`$table$$files`").collect()
+      .groupBy(_.getString(0)).map { case (k, v) => k -> v.length }
+    (layer, perValue)
+  }
+
+  test("a small driver-local append runs one job with no exchange and one file per partition value") {
+    val (layer, perValue) = tracedAppend(rows(1, 200), "small_local")
+    assert(layer.jobs == 1, layer.jobNames.mkString("\n"))
+    assert(layer.plans.nonEmpty && layer.plans.forall(_.exchanges == 0), layer.plans)
+    assert(perValue.size == 5 && perValue.values.forall(_ == 1), perValue)
+  }
+
+  test("a parallel append and a local relation over the bound keep the rebalance exchange") {
+    val parallel = spark.range(0, 1000, 1, 4)
+      .selectExpr("id", "concat('p', id % 5) AS p", "CAST(id AS DOUBLE) AS v")
+    val big = rows(1, 30000)
+    val local = big.queryExecution.optimizedPlan.asInstanceOf[LocalRelation]
+    assert(local.stats.sizeInBytes >
+      spark.sessionState.conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE))
+    for ((df, table) <- Seq(parallel -> "parallel_app", big -> "big_local")) {
+      val (layer, perValue) = tracedAppend(df, table)
+      assert(layer.plans.map(_.exchanges).sum >= 1, s"$table: ${layer.plans}")
+      assert(perValue.size == 5 && perValue.values.forall(_ == 1), s"$table: $perValue")
+    }
   }
 
   test("tags pin a version by name and survive later commits; rollback is history-preserving") {

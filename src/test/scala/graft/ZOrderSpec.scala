@@ -45,6 +45,24 @@ class ZOrderSpec extends AnyFunSuite {
     assert(rows == rows.sorted, "fixing b, z must grow with a")
   }
 
+  test("z-order file bounds are a function of the data alone") {
+    import spark.implicits._
+    // two clusterings of the same rows: new RDD ids, the same files
+    def files(): Seq[Option[(Long, Long, Int)]] =
+      ZOrder.cluster((1 to 5000).map(i => (i.toLong, ((i * 2654435761L) % 1000).toDouble))
+        .toDF("k", "v"), "k", "v", 8)
+        .rdd.mapPartitions { it =>
+          val ks = it.map(_.getLong(0)).toSeq
+          Iterator(if (ks.isEmpty) None else Some((ks.min, ks.max, ks.size)))
+        }.collect().toSeq
+    val first = files()
+    assert(first.flatten.size == 8 && first.flatten.map(_._3).sum == 5000, first)
+    assert(files() == first)
+    // cells go to partition ⌊rows before them × n / all rows⌋
+    assert(ZOrder.cuts(Seq((3L, 10L), (0L, 10L), (1L, 10L), (2L, 10L)), 2) == Seq(2L))
+    assert(ZOrder.cuts(Seq((0L, 1L), (5L, 100L), (9L, 1L)), 4) == Seq(9L, 9L, 9L))
+  }
+
   test("z-order clustering skips more files than linear clustering for a 2-D box") {
     import spark.implicits._
     spark.conf.set("spark.sql.catalog.lake",
@@ -77,7 +95,8 @@ class ZOrderSpec extends AnyFunSuite {
     assert(linTotal >= 16 && zTotal >= 16, s"expected ~16 files, got $linTotal/$zTotal")
     // linear keeps ~20% of files (k-dim only); z-order keeps ~what the
     // 2-D box covers of the curve. Assert the strict win, not exact counts
-    // (repartitionByRange boundaries are sample-dependent).
+    // (the linear layout's repartitionByRange boundaries are
+    // sample-dependent).
     assert(zKept < linKept,
       s"z-order must out-skip linear: z files=$zKept/$zTotal vs linear files=$linKept/$linTotal")
   }
