@@ -24,10 +24,13 @@ import org.apache.spark.sql.types.DateType
   * expression stay Spark's interpreted functions.
   *
   * Planner strategies: [[graft.plans.AsOfJoinStrategy]],
-  * [[graft.plans.DeferredMaterializeStrategy]], and
-  * [[graft.plans.SmallLocalRebalance]], which plans the rebalance over a
-  * driver-local relation within AQE's one-partition bound (1 MiB by
-  * default; a small lake append) as one partition with no shuffle.
+  * [[graft.plans.DeferredMaterializeStrategy]], and two that plan an
+  * input within AQE's one-partition bound ([[graft.plans.OnePartition]],
+  * 1 MiB by default) as one partition with no shuffle:
+  * [[graft.plans.SmallLocalRebalance]], the rebalance over a
+  * driver-local relation (a small lake append), and
+  * [[graft.plans.SmallFullOuterJoin]], a full outer equi-join of two
+  * such inputs (a small lake MERGE).
   * Query-stage preparation rules:
   * [[graft.plans.MergeTwoPhaseAggregate]] and
   * [[graft.plans.SkipPartialAggregate]]; post-planner rule:
@@ -129,6 +132,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     ext.injectPlannerStrategy(_ => graft.plans.DeferredMaterializeStrategy)
     ext.injectPlannerStrategy(_ => graft.plans.SmallLocalRebalance)
+    ext.injectPlannerStrategy(_ => graft.plans.SmallFullOuterJoin)
     ext.injectQueryStagePrepRule(graft.plans.MergeTwoPhaseAggregate.apply)
     ext.injectQueryStagePrepRule(graft.plans.SkipPartialAggregate.apply)
     // before EnsureRequirements: SMJ→SHJ rewrite leaves no orphaned sorts

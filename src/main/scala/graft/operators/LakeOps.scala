@@ -142,13 +142,14 @@ object LakeOps {
         |  o_totalprice DOUBLE)""".stripMargin)
     val src = load(s, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-    ZOrder.cluster(src, "o_orderkey", "o_totalprice", 16)
+    // one min/max aggregate serves both the clustering and the query box
+    val r = ZOrder.ranges(src, "o_orderkey", "o_totalprice")
+      .getOrElse(throw new IllegalStateException("orders has no o_orderkey or o_totalprice"))
+    ZOrder.cluster(src, "o_orderkey", "o_totalprice", 16, r)
       .writeTo("lake.bench_z").append()
-    val r = load(s, dir, "orders")
-      .agg(min(col("o_orderkey")), max(col("o_orderkey")),
-        min(col("o_totalprice")), max(col("o_totalprice"))).head()
-    val (mnk, mxk) = (r.getLong(0), r.getLong(1))
-    val (mnp, mxp) = (r.getDouble(2), r.getDouble(3))
+    // order keys are integers below 2^53, exact as doubles
+    val (mnk, mxk) = (r.aMin.toLong, r.aMax.toLong)
+    val (mnp, mxp) = (r.bMin, r.bMax)
     val loK = mnk + math.floor((mxk - mnk) * 0.40).toLong
     val hiK = mnk + math.floor((mxk - mnk) * 0.60).toLong
     val loP = mnp + (mxp - mnp) * 0.20

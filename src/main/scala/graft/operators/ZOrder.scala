@@ -59,17 +59,30 @@ object ZOrder {
     else least(lit(65535L),
       floor((c.cast("double") - lit(mn)) / lit(mx - mn) * lit(65536.0)).cast(LongType))
 
+  /** The [min, max] ranges of two columns, as doubles, that [[cluster]]
+    * ranks rows on. */
+  final case class Ranges(aMin: Double, aMax: Double, bMin: Double, bMax: Double)
+
+  /** `a`'s and `b`'s ranges over `df`, in one aggregate; None when
+    * either column has no non-null value */
+  def ranges(df: DataFrame, a: String, b: String): Option[Ranges] = {
+    val r = df.agg(min(col(a).cast("double")), max(col(a).cast("double")),
+      min(col(b).cast("double")), max(col(b).cast("double"))).head()
+    if (r.isNullAt(0) || r.isNullAt(2)) None
+    else Some(Ranges(r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
+  }
+
   /** cluster `df` on the Z-curve over (a, b) into `numFiles` partitions
     * of contiguous curve cells; the returned frame writes one
     * tightly-boxed file per partition through any sink that preserves
-    * input partitioning */
-  def cluster(df: DataFrame, a: String, b: String, numFiles: Int): DataFrame = {
-    val r = df.agg(min(col(a).cast("double")), max(col(a).cast("double")),
-      min(col(b).cast("double")), max(col(b).cast("double"))).head()
-    if (r.isNullAt(0) || r.isNullAt(2)) return df // empty/all-null input: nothing to cluster
+    * input partitioning. An empty or all-null input is returned as is. */
+  def cluster(df: DataFrame, a: String, b: String, numFiles: Int): DataFrame =
+    ranges(df, a, b).fold(df)(cluster(df, a, b, numFiles, _))
+
+  /** [[cluster]] over ranges the caller already has (see [[ranges]]) */
+  def cluster(df: DataFrame, a: String, b: String, numFiles: Int, r: Ranges): DataFrame = {
     val keyed = df.withColumn("__zkey", interleave16(
-      rank16(col(a), r.getDouble(0), r.getDouble(1)),
-      rank16(col(b), r.getDouble(2), r.getDouble(3))))
+      rank16(col(a), r.aMin, r.aMax), rank16(col(b), r.bMin, r.bMax)))
     val cell = shiftRightUnsigned(col("__zkey"), 16)
     // rows with a null coordinate have no cell and go to partition 0
     val counts = keyed.groupBy(cell).count().collect()

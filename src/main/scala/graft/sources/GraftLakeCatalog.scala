@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.util
+import java.util.OptionalLong
 
 import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
@@ -14,7 +15,7 @@ import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFu
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
 import org.apache.spark.sql.connector.expressions.{Literal => V2Literal, NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.filter.{Predicate => V2Predicate}
-import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportPartitioning}
+import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportPartitioning, SupportsReportStatistics}
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.execution.datasources.PartitionedFile
@@ -807,8 +808,10 @@ class GraftLakeTable(state: LakeTableState, pinned: Option[LakeSnapshot],
     }
 }
 
+/** `rewrite`, when given, gets the files the scan keeps, and makes the
+  * scan a [[LakeRewriteScan]]: the row-level operation's scan. */
 class LakeScanBuilder(state: LakeTableState, snapshot: LakeSnapshot,
-    onBuild: Vector[LakeDataFile] => Unit = _ => ())
+    rewrite: Option[Vector[LakeDataFile] => Unit] = None)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
 
   private var accepted: Array[Filter] = Array.empty
@@ -925,8 +928,10 @@ class LakeScanBuilder(state: LakeTableState, snapshot: LakeSnapshot,
       pruneSets.forall { case (i, allowed) => allowed.contains(f.partition(i)) } &&
         statMatchers.forall(m => m(f))
     }
-    onBuild(kept)
-    new LakeScan(state, snapshot, kept, required)
+    rewrite match {
+      case Some(onBuild) => onBuild(kept); new LakeRewriteScan(state, snapshot, kept, required)
+      case None => new LakeScan(state, snapshot, kept, required)
+    }
   }
 }
 
@@ -975,10 +980,10 @@ class LakeScan(state: LakeTableState, snapshot: LakeSnapshot,
     * parquet read schema (only the needed columns are requested from
     * the file — pushdown reaches the parquet footer); -1 = `_partition`
     * metadata constant; -2 = column added after this file was written
-    * (reads as typed null). One serializable parquet reader function is
-    * built per distinct (file layout, pruned subset) pair and shipped
-    * once in the reader factory; partitions carry only the path and the
-    * binding table. */
+    * (reads as typed null). One serializable parquet reader function per
+    * distinct (file layout, pruned subset) pair, kept across scans by
+    * [[LakeFileStore.readerFunc]], is shipped once in the reader factory;
+    * partitions carry only the path and the binding table. */
   private lazy val planned: (Array[InputPartition], Array[PartitionedFile => Iterator[InternalRow]]) = {
     val funcs = mutable.ArrayBuffer[PartitionedFile => Iterator[InternalRow]]()
     val funcIdx = mutable.HashMap[(String, String), Int]()
@@ -1053,6 +1058,22 @@ class LakeScan(state: LakeTableState, snapshot: LakeSnapshot,
         }
       }
     }
+  }
+}
+
+/** The copy-on-write rewrite's scan: a [[LakeScan]] that reports its
+  * size, the bytes of its live data files and the manifest's row count,
+  * so that a MERGE into a small table can join in one partition
+  * ([[graft.plans.SmallFullOuterJoin]]). Plain reads report no
+  * statistics, which keeps their join and broadcast choices (the
+  * storage-partitioned joins) where they are. */
+class LakeRewriteScan(state: LakeTableState, snapshot: LakeSnapshot,
+    files: Vector[LakeDataFile], required: StructType)
+    extends LakeScan(state, snapshot, files, required) with SupportsReportStatistics {
+  override def estimateStatistics(): Statistics = new Statistics {
+    override def sizeInBytes(): OptionalLong =
+      OptionalLong.of(files.iterator.map(f => new java.io.File(f.path).length()).sum)
+    override def numRows(): OptionalLong = OptionalLong.of(files.iterator.map(_.rowCount).sum)
   }
 }
 
@@ -1169,7 +1190,7 @@ class LakeRowLevelOperation(state: LakeTableState,
   override def command(): RowLevelOperation.Command = cmd
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new LakeScanBuilder(state, state.current, kept => scannedFiles = kept)
+    new LakeScanBuilder(state, state.current, Some(kept => scannedFiles = kept))
 
   /** carrying `_partition` through the rewrite keeps write routing
     * partition-stable AND makes Spark plan the metadata-projection write

@@ -5,10 +5,13 @@ import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 import java.util.UUID
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptContext, TaskAttemptID, TaskID, TaskType, JobID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.SparkContext
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -51,6 +54,13 @@ import org.apache.spark.util.SerializableConfiguration
   * whole conf for column settings), one filesystem instance (kept out of
   * Hadoop's per-scheme cache, so no other `file:` user gets it), and two
   * files on disk.
+  *
+  * What a scan costs: planning looks up one reader function per file
+  * layout it reads ([[readerFunc]]). The function and the Hadoop conf it
+  * broadcasts are built once per context, session conf and layout and
+  * then reused, so a repeated scan broadcasts nothing. Each file read
+  * still pays its own parquet footer and an output projection generated
+  * for that file (`LakeScan`'s reader factory).
   */
 object LakeFileStore {
 
@@ -130,19 +140,50 @@ object LakeFileStore {
   /** Driver-side: a SERIALIZABLE per-file read function (column-pruned
     * to `requiredSchema`, a subset of `fileSchema`'s synthetic columns).
     * `OPTION_RETURNING_BATCH -> false` forces plain row iterators — the
-    * DSv2 PartitionReader contract here is row-at-a-time. */
+    * DSv2 PartitionReader contract here is row-at-a-time.
+    *
+    * Building one broadcasts the whole Hadoop conf (about 1100 entries,
+    * several ms), so a built function is kept per (live `SparkContext`,
+    * Hadoop-conf contents, file schema, pruned schema) and later scans
+    * reuse it and its broadcast. The conf contents stand for the session:
+    * `newHadoopConf` copies every SQL conf the session has set, and the
+    * parquet reader reads nothing else, so equal contents build an
+    * identical function. The memo keeps the [[MaxReaders]] most recently
+    * used entries and drops those of a stopped context, whose broadcast
+    * is gone. */
   def readerFunc(fileSchema: StructType, requiredSchema: StructType)
       : PartitionedFile => Iterator[InternalRow] = {
     val spark = SparkSession.active
-    new ParquetFileFormat().buildReaderWithPartitionValues(
-      spark,
-      dataSchema = fileSchema,
-      partitionSchema = new StructType(),
-      requiredSchema = requiredSchema,
-      filters = Nil,
-      options = Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-      hadoopConf = spark.sessionState.newHadoopConf())
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val key = ReaderKey(spark.sparkContext,
+      hadoopConf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap, fileSchema, requiredSchema)
+    readers.synchronized {
+      readers.keySet.removeIf(_.sc.isStopped)
+      readers.computeIfAbsent(key, _ => new ParquetFileFormat().buildReaderWithPartitionValues(
+        spark,
+        dataSchema = fileSchema,
+        partitionSchema = new StructType(),
+        requiredSchema = requiredSchema,
+        filters = Nil,
+        options = Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        hadoopConf = hadoopConf))
+    }
   }
+
+  /** entries the reader memo keeps: a table layout read from two sessions
+    * needs about four */
+  private val MaxReaders = 8
+
+  private final case class ReaderKey(sc: SparkContext, conf: Map[String, String],
+      fileSchema: StructType, requiredSchema: StructType)
+
+  /** the reader memo, least recently used first */
+  private val readers =
+    new java.util.LinkedHashMap[ReaderKey, PartitionedFile => Iterator[InternalRow]](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[ReaderKey, PartitionedFile => Iterator[InternalRow]]): Boolean =
+        size > MaxReaders
+    }
 
   def partitionedFile(path: String): PartitionedFile = {
     val f = new File(path)

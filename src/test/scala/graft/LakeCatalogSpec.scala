@@ -587,6 +587,83 @@ class LakeCatalogSpec extends AnyFunSuite {
     }
   }
 
+  // ---- MERGE in one partition (SmallFullOuterJoin) ----
+
+  /** a 5000-row table with five partition values, the shape the lake
+    * read/write benchmark upserts into */
+  private def seeded(name: String): Unit = {
+    partitioned(name)
+    rows(1, 5000).writeTo(s"lake.$name").append()
+  }
+
+  private def idValues(table: String): Map[Long, Double] =
+    spark.table(s"lake.$table").select("id", "v").collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+
+  test("a 50-row MERGE into a small table runs one job and one task with no exchange") {
+    seeded("merge_small")
+    val (_, layer) = PlanHealth.traced(spark)(upsert("merge_small", rows(4976, 5025)))
+    assert(layer.jobs == 1 && layer.tasks == 1, layer.jobNames.mkString("\n"))
+    assert(layer.plans.nonEmpty && layer.plans.forall(_.exchanges == 0), layer.plans)
+    val got = idValues("merge_small")
+    assert(got.size == 5025)
+    // matched rows take the source's v + 1, new rows their own v
+    assert((1 to 5025).forall(i => got(i.toLong) == (if (i >= 4976 && i <= 5000) i + 1.0 else i * 1.0)))
+  }
+
+  test("a MERGE source over the bound keeps the two exchanges of the full outer join") {
+    seeded("merge_big_src")
+    val (_, layer) = PlanHealth.traced(spark)(upsert("merge_big_src", rows(1, 30000)))
+    assert(layer.plans.map(_.exchanges).sum == 2, layer.plans)
+    val got = idValues("merge_big_src")
+    assert(got.size == 30000 && (1 to 30000).forall(i => got(i.toLong) == (if (i <= 5000) i + 1.0 else i * 1.0)))
+  }
+
+  test("a source row matching one target row twice still fails the MERGE cardinality check") {
+    seeded("merge_dup")
+    val e = intercept[Exception](upsert("merge_dup", rows(10, 12).union(rows(11, 11))))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage.contains("MERGE_CARDINALITY_VIOLATION")), e)
+    assert(idValues("merge_dup") == (1 to 5000).map(i => i.toLong -> i * 1.0).toMap)
+  }
+
+  test("a MERGE with NOT MATCHED BY SOURCE clauses runs in one partition and gives the right rows") {
+    partitioned("merge_by_src")
+    rows(1, 10).writeTo("lake.merge_by_src").append()
+    rows(8, 12).createOrReplaceTempView("merge_by_src_src")
+    val (_, layer) = PlanHealth.traced(spark)(spark.sql(
+      """MERGE INTO lake.merge_by_src t USING merge_by_src_src s ON t.id = s.id
+        |WHEN MATCHED THEN UPDATE SET v = s.v + 1
+        |WHEN NOT MATCHED THEN INSERT *
+        |WHEN NOT MATCHED BY SOURCE AND t.id <= 3 THEN DELETE
+        |WHEN NOT MATCHED BY SOURCE THEN UPDATE SET v = -1""".stripMargin))
+    assert(layer.plans.nonEmpty && layer.plans.forall(_.exchanges == 0), layer.plans)
+    assert(idValues("merge_by_src") == ((4 to 7).map(_.toLong -> -1.0) ++
+      (8 to 10).map(i => i.toLong -> (i + 1.0)) ++ (11 to 12).map(i => i.toLong -> i * 1.0)).toMap)
+  }
+
+  // ---- the reader memo (LakeFileStore.readerFunc) ----
+
+  private val layout = graft.sources.LakeFileStore.syntheticSchema(Seq(0, 1),
+    Seq(org.apache.spark.sql.types.LongType, org.apache.spark.sql.types.DoubleType))
+
+  private def reader() = {
+    org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    graft.sources.LakeFileStore.readerFunc(layout, layout)
+  }
+
+  test("two scans under the same conf reuse one reader function; a changed conf builds another") {
+    val first = reader()
+    assert(reader() eq first)
+    for (key <- Seq("spark.sql.caseSensitive", "spark.sql.parquet.enableVectorizedReader")) {
+      val before = spark.conf.getAll.get(key) // set in the session, not a default
+      spark.conf.set(key, (!spark.conf.get(key).toBoolean).toString)
+      try assert(reader() ne first, key)
+      finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      assert(reader() eq first, key)
+    }
+  }
+
   test("tags pin a version by name and survive later commits; rollback is history-preserving") {
     spark.sql("CREATE TABLE lake.tg (id BIGINT)")
     import spark.implicits._
@@ -603,4 +680,18 @@ class LakeCatalogSpec extends AnyFunSuite {
     assert(spark.sql("SELECT * FROM lake.tg VERSION AS OF 3").count() == 2)
   }
 
+  // last in this suite: it stops the shared context
+  test("a lake table reads correctly after the SparkContext stops and starts again") {
+    seeded("restart")
+    val before = reader()
+    assert(spark.table("lake.restart").count() == 5000)
+    spark.stop()
+    val again = GraftSparkSession.spark
+    again.conf.set("spark.sql.catalog.lake", classOf[graft.sources.GraftLakeCatalog].getName)
+    org.apache.spark.sql.SparkSession.setActiveSession(again)
+    assert(graft.sources.LakeFileStore.readerFunc(layout, layout) ne before)
+    val got = again.table("lake.restart").select("id", "v").collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(got == (1 to 5000).map(i => i.toLong -> i * 1.0).toMap)
+  }
 }

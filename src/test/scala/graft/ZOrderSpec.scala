@@ -63,6 +63,18 @@ class ZOrderSpec extends AnyFunSuite {
     assert(ZOrder.cuts(Seq((0L, 1L), (5L, 100L), (9L, 1L)), 4) == Seq(9L, 9L, 9L))
   }
 
+  test("lake_zorder_skip computes orders' ranges once: six construction jobs at sf0.01") {
+    val sf = new java.io.File(GraftSparkSession.sfDir).getParent + "/sf0.01" // beside the spec fixture
+    // on an empty cache with Tables' schema memo warm: a first load pays a footer job
+    spark.catalog.clearCache()
+    Tables.load(spark, sf, "orders").schema
+    val (df, layer) = PlanHealth.traced(spark)(SparkEntry.queries("lake_zorder_skip")(spark, sf))
+    // two jobs each: the ranges and the cell counts (AQE's shuffle stage,
+    // then the final stage), the append's shuffle and its write
+    assert(layer.jobs == 6, layer.jobNames.mkString("\n"))
+    assert(df.collect().head.getLong(0) > 0)
+  }
+
   test("z-order clustering skips more files than linear clustering for a 2-D box") {
     import spark.implicits._
     spark.conf.set("spark.sql.catalog.lake",
